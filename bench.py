@@ -279,8 +279,7 @@ def main() -> None:
     latb, latw_b = [], []
     for rep in range(3):
         for term in ("spark", "window", "hash", "merge", "scan"):
-            if hasattr(ix, "_bitmap_cache"):
-                ix._bitmap_cache.clear()
+            ix._caches.bitmaps.clear()
             t0 = time.time()
             ix.query_term_bitmap("text", term)
             latb.append(time.time() - t0)

@@ -261,7 +261,7 @@ def measure_bitmap(classes, ix) -> dict:
     n = 2048
     t0 = time.time()
     for i in range(n):
-        ix._bitmap_cache.clear()
+        ix._caches.bitmaps.clear()
         ix.query_term_bitmap(col, terms[i % len(terms)])
     cold = n / (time.time() - t0)
     t0 = time.time()
@@ -335,7 +335,7 @@ def measure_granule_sweep(classes, ix) -> dict:
     n = 256
     t0 = time.time()
     for i in range(n):
-        ix._bitmap_cache.clear()
+        ix._caches.bitmaps.clear()
         scalar_sweep(terms[i % len(terms)])
     cold = n / (time.time() - t0)
     t0 = time.time()

@@ -34,6 +34,7 @@ from __future__ import annotations
 
 import json
 import os
+from collections import OrderedDict
 from collections.abc import Iterator
 from dataclasses import dataclass, field as dc_field
 
@@ -138,6 +139,98 @@ class Statistics:
             total_num_tokens=tok,
             total_num_docs=n,
         )
+
+
+@dataclass(frozen=True)
+class _ScoringEnv:
+    """One query's BM25 statistics, resolved once: injected global
+    ``Statistics`` (Q9) when they carry doc freqs, this index's own
+    otherwise; the index's own df fills terms an injection lacks."""
+
+    df: dict  # (col, term) -> doc freq
+    n_docs: int
+    avgdl: dict  # col -> mean tokens per doc
+    injected: bool  # scores differ from the index's own: never cache them
+
+    def idf(self, col: str, term: str) -> float:
+        return float(bm25.idf(self.df.get((col, term), 0), self.n_docs))
+
+
+class _LRU:
+    """Least-recently-used map bounded by an entry count or by bytes
+    (``nbytes`` given per ``put``, kept as a running total).  ``put``
+    never evicts a key in ``keep`` — the keys the current query still
+    reads — and a value larger than the whole byte cap is handed back
+    uncached."""
+
+    def __init__(self, max_entries: int | None = None,
+                 max_bytes: int | None = None):
+        self.max_entries = max_entries
+        self.max_bytes = max_bytes
+        self.nbytes = 0
+        self._d: OrderedDict = OrderedDict()  # key -> (nbytes, value)
+
+    def __len__(self) -> int:
+        return len(self._d)
+
+    def __contains__(self, key) -> bool:
+        return key in self._d
+
+    def __iter__(self):
+        return iter(self._d)
+
+    def get(self, key):
+        ent = self._d.get(key)
+        if ent is None:
+            return None
+        self._d.move_to_end(key)
+        return ent[1]
+
+    def put(self, key, value, keep=(), nbytes: int = 0):
+        if self.max_bytes is not None and nbytes > self.max_bytes:
+            return value
+        old = self._d.pop(key, None)
+        if old is not None:
+            self.nbytes -= old[0]
+        self._d[key] = (nbytes, value)
+        self.nbytes += nbytes
+        n, size, victims = len(self._d), self.nbytes, []
+        for k, (kb, _) in self._d.items():  # oldest first
+            if not ((self.max_entries is not None and n > self.max_entries)
+                    or (self.max_bytes is not None
+                        and size > self.max_bytes)):
+                break
+            if k not in keep and k != key:
+                victims.append(k)
+                n, size = n - 1, size - kb
+        for k in victims:
+            self.nbytes -= self._d.pop(k)[0]
+        return value
+
+    def clear(self) -> None:
+        self._d.clear()
+        self.nbytes = 0
+
+
+class _ReaderCaches:
+    """Everything a reader derives from one index generation: the
+    in-process LRUs, the bitmap result cache, prepared plans and lazily
+    opened handles.  ``reload()`` and ``close()`` swap in a fresh
+    instance, so no entry outlives the generation it was built from."""
+
+    def __init__(self, ix: "SearchIndex"):
+        n = ix._local_cache_max
+        self.postings = _LRU(n)  # (col, term) -> (doc_ids, tfs, norm_ids)
+        self.scores = _LRU(n)  # (col, term) -> (doc_ids, scores, max)
+        self.positions = _LRU(n)  # (col, term) -> phrase runs
+        self.ids = _LRU(n)  # (col, term) -> doc ids (bitmap family)
+        self.dense = _LRU(max_bytes=ix.LOCAL_DENSE_MAX_BYTES)
+        self.bitmaps = _LRU(ix.BITMAP_CACHE_CAPACITY)
+        self.plans = _LRU(256)  # query shape -> prepared DataFrame
+        self.sidecar: dict | None = None  # opened bitmap sidecar
+        self.dataset = None  # pyarrow postings dataset
+        self.postings_bytes: int | None = None
+        self.empty_scores: DataFrame | None = None
 
 
 def _eval_phrase(
@@ -268,6 +361,18 @@ def _assemble_phrase_runs(runs: list) -> tuple:
         d, tf, nm, flat = d[order], tf[order], nm[order], flat[idx]
         offs = np.concatenate(([0], np.cumsum(tf, dtype=np.int64)))
     return d, tf, nm, flat, offs
+
+
+def _top_k(docs: np.ndarray, scores: np.ndarray,
+           k: int) -> list[tuple[int, float]]:
+    """The k best (doc, score) pairs in (score desc, doc asc) order;
+    an O(n) kth-score cut (ties kept) before the exact sort."""
+    if 0 < 8 * k < scores.size:
+        cut = np.partition(scores, scores.size - k)[scores.size - k]
+        keep = np.flatnonzero(scores >= cut)
+        docs, scores = docs[keep], scores[keep]
+    idx = np.lexsort((docs, -scores))[:k]
+    return [(int(docs[i]), float(scores[i])) for i in idx]
 
 
 #: per-worker reusable kernel buffers (name -> flat ndarray).  Spark
@@ -611,13 +716,12 @@ class SearchIndex:
         self._tombstone_n: int | None = None  # lazy count (cheap parquet agg)
         self._stats_cache: dict | None = None  # optional driver-side dict
         self._bcast_pool: list = []  # broadcasts of the most recent query
-        # prepared-plan cache: repeated query shapes skip the driver-side
-        # plan build (~150 ms of py4j round-trips); execution still runs
-        # per collect().  Invalidated by reload() — a cached plan embeds
-        # the tombstone array and idf constants of the index state it
-        # was compiled against.
-        self._plan_cache: dict = {}
-        self._plan_cache_max = 256
+        self._local_cache_max = 4096  # entry cap of the in-process LRUs
+        # per-generation state, prepared plans included: repeated query
+        # shapes skip the driver-side plan build (~150 ms of py4j
+        # round-trips), and a cached plan embeds the tombstone array
+        # and idf constants of the index state it was compiled against
+        self._caches = _ReaderCaches(self)
 
     @classmethod
     def open_local(cls, index_path: str) -> "SearchIndex":
@@ -666,25 +770,10 @@ class SearchIndex:
         self._postings_df = None
         self._stats_df = None
         if self._stats_cache is not None:
-            self._stats_cache = None
             self.enable_stats_cache()
         self._tombstones = None
         self._tombstone_n = None
-        self._pa_dataset = None
-        self._postings_bytes_cache = None
-        self._plan_cache.clear()
-        self._empty_scores = None
-        # bump the reload generation: bitmap-cache entries from the old
-        # reader (reference cache key's reader.address component) die
-        self._reload_gen = getattr(self, "_reload_gen", 0) + 1
-        if hasattr(self, "_bitmap_cache"):
-            self._bitmap_cache.clear()
-        for attr in ("_local_cache", "_local_raw_cache",
-                     "_local_score_cache", "_local_pos_cache",
-                     "_local_ids_cache", "_local_dense_cache"):
-            if hasattr(self, attr):
-                getattr(self, attr).clear()
-        self._sidecar = None  # re-validate the fence on next bitmap query
+        self._caches = _ReaderCaches(self)
 
     def close(self) -> None:
         """Reference ffi_free_index_reader analog (Q14): release every
@@ -695,15 +784,7 @@ class SearchIndex:
         self._stats_cache = None
         self._tombstones = None
         self._tombstone_n = None
-        self._pa_dataset = None
-        self._postings_bytes_cache = None
-        for attr in ("_local_cache", "_local_raw_cache",
-                     "_local_score_cache", "_local_pos_cache",
-                     "_local_ids_cache", "_bitmap_cache",
-                     "_local_dense_cache"):
-            if hasattr(self, attr):
-                getattr(self, attr).clear()
-        self._sidecar = None
+        self._caches = _ReaderCaches(self)
 
     @property
     def docs(self) -> DataFrame:
@@ -883,6 +964,8 @@ class SearchIndex:
         get_doc_freq + get_total_num_tokens + get_total_num_docs)."""
         pairs = [(c, t) for c, toks in tokens_by_col.items() for t in toks]
         docs_freq = []
+        if pairs and self._stats_cache is None and self.spark is None:
+            self.enable_stats_cache()  # closed open_local() reader
         if pairs and self._stats_cache is not None:
             for c, t in dict.fromkeys(pairs):
                 df = self._stats_cache.get((c, t))
@@ -900,6 +983,26 @@ class SearchIndex:
             total_num_tokens=dict(self.meta.total_tokens or {}),
             total_num_docs=self.meta.total_docs,
         )
+
+    def _scoring_env(self, pairs, statistics: Statistics | None
+                     ) -> _ScoringEnv:
+        """Resolve df/idf/avgdl inputs for the concrete (col, term)
+        ``pairs`` of one query — the single place every tier reads
+        injected vs local statistics from."""
+        by_col: dict[str, list[str]] = {}
+        for c, t in pairs:
+            by_col.setdefault(c, []).append(t)
+        local = self.local_statistics(by_col)
+        injected = statistics is not None and bool(statistics.docs_freq)
+        use = statistics if injected else local
+        n_docs = use.total_num_docs or 1
+        df = {(c, t): d for (t, c, d) in use.docs_freq}
+        if injected:
+            for (t, c, d) in local.docs_freq:
+                df.setdefault((c, t), d)
+        avgdl = {c: use.total_num_tokens.get(c, 0) / n_docs
+                 for c in self.config.columns}
+        return _ScoringEnv(df, n_docs, avgdl, injected)
 
     def get_doc_freq(self, sentence: str) -> list[tuple[str, str, int]]:
         toks = {c: self._analyzers()[c](sentence) for c in self.config.columns}
@@ -953,40 +1056,18 @@ class SearchIndex:
         avgdl, tomb, alive_bitmap) — ONE broadcast per query, not five;
         each TorrentBroadcast costs a driver round-trip (~4 ms) that
         shows up directly in single-query p50."""
-        cfg = self.config
-
-        # global stats for idf/avgdl: injected (Q9) or this index's own
-        local = self.local_statistics(
-            {c: [t for col, t in atoms if col in (None, c)] for c in cfg.columns}
-        )
-        use = stats if stats is not None and stats.docs_freq else local
-        n_docs = use.total_num_docs or 1
-        df_map = {(c, t): d for (t, c, d) in use.docs_freq}
-        if stats is not None and stats.docs_freq:
-            # fall back to local df for terms absent from the injection
-            for (t, c, d) in local.docs_freq:
-                df_map.setdefault((c, t), d)
-        avgdl = {
-            c: (use.total_num_tokens.get(c, 0) / n_docs) if n_docs else 1.0
-            for c in cfg.columns
-        }
-
         # atom subscription: concrete (col, term) -> [atom ids]
         subs: dict[tuple[str, str], list[int]] = {}
         for i, (col, term) in zip(atom_ids, atoms):
-            targets = [col] if col is not None else cfg.columns
-            for c in targets:
+            for c in ([col] if col is not None else self.config.columns):
                 subs.setdefault((c, term), []).append(i)
-
-        idf_map = {
-            (c, t): float(bm25.idf(df_map.get((c, t), 0), n_docs))
-            for (c, t) in subs
-        }
+        env = self._scoring_env(subs, stats)
+        idf_map = {k: env.idf(*k) for k in subs}
         tomb = self._tombstone_small_array()
         anti_join_tombs = tomb is None  # large delete set: DF anti-join below
         if anti_join_tombs:
             tomb = np.empty(0, dtype=np.int64)
-        return (self._bcast((subs, idf_map, avgdl, tomb, alive_bitmap)),
+        return (self._bcast((subs, idf_map, env.avgdl, tomb, alive_bitmap)),
                 anti_join_tombs)
 
     def _scored_atoms_df(
@@ -1162,10 +1243,11 @@ class SearchIndex:
         """Cached empty (row_id, score) frame — createDataFrame costs a
         ~20 ms driver round-trip, too much to pay on every query just in
         case the tree is empty."""
-        if getattr(self, "_empty_scores", None) is None:
-            self._empty_scores = self._require_spark().createDataFrame(
+        c = self._caches
+        if c.empty_scores is None:
+            c.empty_scores = self._require_spark().createDataFrame(
                 [], "row_id long, score double")
-        return self._empty_scores
+        return c.empty_scores
 
     def _bcast(self, obj):
         """Broadcast with lifecycle: kept for the current query, released
@@ -1244,24 +1326,6 @@ class SearchIndex:
                 F.collect_list(F.struct(F.col("atom"), F.col("s")))
             ).alias("sc"))
 
-    def _scored_phrase_df(
-        self,
-        col: str,
-        terms: list[str],
-        atom_id: int,
-        stats: Statistics | None,
-        alive_bitmap: bytes | None,
-        slop: int = 0,
-        packed: bool = False,
-        n_subs: int = 1,
-        offsets: tuple | None = None,
-    ) -> DataFrame:
-        """Single phrase atom — thin wrapper over the multi-atom pass."""
-        return self._scored_phrases_df(
-            [(atom_id, col, list(terms), int(slop),
-              tuple(offsets) if offsets else None)],
-            stats, alive_bitmap, packed=packed, n_subs=n_subs)
-
     def _scored_phrases_df(
         self,
         phrase_plans: list,
@@ -1298,21 +1362,13 @@ class SearchIndex:
         cols_terms: dict[str, set] = {}
         for (_aid, col, terms, _slop, _offs) in phrase_plans:
             cols_terms.setdefault(col, set()).update(terms)
-        local = self.local_statistics(
-            {c: sorted(ts) for c, ts in cols_terms.items()})
-        use = stats if stats is not None and stats.docs_freq else local
-        n_docs = use.total_num_docs or 1
-        df_map = {(c, t): d for (t, c, d) in use.docs_freq}
-        for (t, c, d) in local.docs_freq:
-            df_map.setdefault((c, t), d)
-        plans = []
-        for (aid, col, terms, slop, offs) in phrase_plans:
-            idf_map = {t: float(bm25.idf(df_map.get((col, t), 0), n_docs))
-                       for t in terms}
-            avgdl = (use.total_num_tokens.get(col, 0) / n_docs
-                     if n_docs else 1.0)
-            plans.append((int(aid), col, list(terms), idf_map, avgdl,
-                          int(slop), tuple(offs) if offs else None))
+        env = self._scoring_env(
+            [(c, t) for c, ts in cols_terms.items() for t in sorted(ts)],
+            stats)
+        plans = [(int(aid), col, list(terms),
+                  {t: env.idf(col, t) for t in terms}, env.avgdl[col],
+                  int(slop), tuple(offs) if offs else None)
+                 for (aid, col, terms, slop, offs) in phrase_plans]
         k1, b = self.config.k1, self.config.b
         bs = self.config.block_size
         tomb = self._tombstone_small_array()
@@ -1465,7 +1521,7 @@ class SearchIndex:
                          tuple(column_names) if column_names else None,
                          top_k, operator_or, enable_nlq, with_docs, limit,
                          use_wand)
-            hit = self._plan_cache.get(cache_key)
+            hit = self._caches.plans.get(cache_key)
             if hit is not None:
                 return hit
         cols = [c for c in (column_names or self.config.columns)
@@ -1484,9 +1540,7 @@ class SearchIndex:
 
         def done(df: DataFrame) -> DataFrame:
             if cache_key is not None:
-                if len(self._plan_cache) >= self._plan_cache_max:
-                    self._plan_cache.clear()  # rare; keys are query shapes
-                self._plan_cache[cache_key] = df
+                self._caches.plans.put(cache_key, df)
             return df
 
         if tree is None:
@@ -1717,8 +1771,6 @@ class SearchIndex:
                 sentences, column_names=column_names, top_k=top_k,
                 enable_nlq=enable_nlq, alive_bitmap=alive_bitmap,
                 statistics=statistics)
-        if not hasattr(self, "_local_cache"):
-            self.enable_local_cache()
         norm = [(s, False) if isinstance(s, str) else (s[0], bool(s[1]))
                 for s in sentences]
         rows = []
@@ -2109,26 +2161,10 @@ class SearchIndex:
 
         if not atoms:
             return self._empty_scores_df()
-        cols_map: dict[str, list[str]] = {}
-        for c, t in atoms:
-            cols_map.setdefault(c, []).append(t)
-
-        local = self.local_statistics(cols_map)
-        use = statistics if statistics is not None and statistics.docs_freq \
-            else local
-        n_docs = use.total_num_docs or 1
-        df_map = {(t, c): d for (t, c, d) in use.docs_freq}
-        for (t, c, d) in local.docs_freq:
-            df_map.setdefault((t, c), d)
-        idf_map = {(c, t): float(bm25.idf(df_map.get((t, c), 0), n_docs))
-                   for c, t in atoms}
-        avgdl_map = {
-            c: (use.total_num_tokens.get(c, 0) / n_docs if n_docs else 1.0)
-            for c in cols_map
-        }
-
+        env = self._scoring_env(atoms, statistics)
         scorer = wand_mod.make_wand_scorer(
-            atoms=atoms, idf_map=idf_map, avgdl_map=avgdl_map,
+            atoms=atoms, idf_map={a: env.idf(*a) for a in atoms},
+            avgdl_map=env.avgdl,
             k1=self.config.k1, b=self.config.b,
             block_size=self.config.block_size, top_k=top_k,
             and_mode=and_mode, alive_bitmap=alive_bitmap,
@@ -2139,7 +2175,7 @@ class SearchIndex:
         cand = self._postings.where(F.expr(
             f"bucket IN ({_sql_int_list(buckets)}) "
             f"AND term IN ({_sql_str_list(terms)}) "
-            f"AND col IN ({_sql_str_list(sorted(cols_map))})"
+            f"AND col IN ({_sql_str_list(sorted({c for c, _ in atoms}))})"
         )).select("shard", "col", "term", "df", "block_first", "block_last",
                   "block_max_tf", "block_min_norm", "deltas", "tfs", "norms")
 
@@ -2170,23 +2206,25 @@ class SearchIndex:
 
     # ------------------------------------------------------- local hot path
     def enable_local_cache(self, max_terms: int = 4096) -> None:
-        """Driver-side decoded-postings LRU for ``bm25_search_local``."""
-        from collections import OrderedDict
-
-        self._local_cache: "OrderedDict" = OrderedDict()
+        """Cap each in-process LRU (decoded postings, per-term score
+        vectors, phrase positions, bitmap doc ids) at ``max_terms``
+        entries.  Every reader has them (4096 by default); this resizes
+        them and starts the reader's caches empty."""
         self._local_cache_max = max_terms
+        self._caches = _ReaderCaches(self)
 
     def _postings_dataset(self):
         """pyarrow dataset over the postings files — the local path reads
         the open-parquet index directly (bucket partition dirs + term
         row-group statistics pushdown), no Spark job even cold.  File
         listing happens once per reader; reload() drops it."""
-        if getattr(self, "_pa_dataset", None) is None:
+        c = self._caches
+        if c.dataset is None:
             import pyarrow.dataset as ds
-            self._pa_dataset = ds.dataset(
+            c.dataset = ds.dataset(
                 os.path.join(self.index_path, POSTINGS_DIR),
                 partitioning="hive")
-        return self._pa_dataset
+        return c.dataset
 
     def _fetch_rows_arrow(self, atoms: list[tuple[str, str]],
                           columns: list[str]) -> pd.DataFrame:
@@ -2202,13 +2240,18 @@ class SearchIndex:
         return self._postings_dataset().to_table(
             filter=expr, columns=columns).to_pandas()
 
-    def _local_postings(self, atoms: list[tuple[str, str]]):
-        """(col, term) -> (doc_ids, tfs, norm_ids), via one pruned scan
-        for all cache misses; LRU-cached decoded arrays."""
-        if not hasattr(self, "_local_cache"):
-            self.enable_local_cache()
-        cache = self._local_cache
-        missing = [a for a in atoms if a not in cache]
+    def _local_postings(self, atoms: list[tuple[str, str]]) -> dict:
+        """(col, term) -> doc-sorted (doc_ids, tfs, norm_ids): one
+        pruned scan for all cache misses, decoded into the postings
+        LRU."""
+        cache = self._caches.postings
+        out, missing = {}, []
+        for a in atoms:
+            hit = cache.get(a)
+            if hit is None:
+                missing.append(a)
+            else:
+                out[a] = hit
         if missing:
             pdf = self._fetch_rows_arrow(
                 missing, ["col", "term", "block_first", "deltas", "tfs",
@@ -2220,96 +2263,18 @@ class SearchIndex:
                 if key in got:
                     got[key].append(layout.decode_blocks(
                         r.block_first, r.deltas, r.tfs, r.norms, bs))
-            for a in missing:
-                runs = got[a]
+            keep = set(atoms)
+            for a, runs in got.items():
                 if runs:
-                    d = np.concatenate([x[0] for x in runs])
-                    t = np.concatenate([x[1] for x in runs])
-                    m = np.concatenate([x[2] for x in runs])
+                    d, t, m = (np.concatenate([x[i] for x in runs])
+                               for i in range(3))
                     order = np.argsort(d, kind="stable")
-                    cache[a] = (d[order], t[order], m[order])
+                    val = (d[order], t[order], m[order])
                 else:
-                    cache[a] = (np.empty(0, np.int64), np.empty(0, np.int64),
-                                np.empty(0, np.uint8))
-            # evict AFTER the fill, never a key the current query needs:
-            # evicting inside the loop could drop an atom of this very
-            # query (when len(atoms) > max) and KeyError at gather time
-            current = set(atoms)
-            evictable = [k for k in cache if k not in current]
-            while len(cache) > self._local_cache_max and evictable:
-                cache.pop(evictable.pop(0), None)  # oldest first (LRU order)
-        out = {}
-        for a in atoms:
-            cache.move_to_end(a)
-            out[a] = cache[a]
+                    val = (np.empty(0, np.int64), np.empty(0, np.int64),
+                           np.empty(0, np.uint8))
+                out[a] = cache.put(a, val, keep)
         return out
-
-    def _local_raw_rows(self, col: str, tokens: list[str]) -> pd.DataFrame:
-        """Posting rows for (col, token), LRU-cached as pandas frames —
-        the input shape search.wand.make_wand_scorer expects.
-
-        On cache fill, a term's fragments (tail terms are deliberately
-        left unmerged by the build — builder._merge_fragments) are
-        consolidated into ONE row with rebuilt block metadata: decode,
-        concat the disjoint sorted runs, re-encode.  One-time per-term
-        cost; every warm query then prunes/decodes a single row instead
-        of paying per-fragment python overhead (measured 235 rows/query
-        on the zipf corpus)."""
-        if not hasattr(self, "_local_raw_cache"):
-            from collections import OrderedDict
-            self._local_raw_cache: "OrderedDict" = OrderedDict()
-        cache = self._local_raw_cache
-        bs = self.config.block_size
-        missing = [t for t in tokens if (col, t) not in cache]
-        if missing:
-            pdf = self._fetch_rows_arrow(
-                [(col, t) for t in missing],
-                ["col", "term", "shard", "df", "block_first", "block_last",
-                 "block_max_tf", "block_min_norm", "deltas", "tfs", "norms"])
-            pdf = pdf[pdf["col"] == col]
-            # group once instead of scanning pdf per token — bulk warms
-            # (warm_terms) pass hundreds of tokens against ~1e5 fragment
-            # rows, where per-token boolean masks go quadratic
-            by_term = dict(iter(pdf.groupby("term", sort=False))) \
-                if len(pdf) else {}
-            empty = pdf.iloc[0:0]
-            for t in missing:
-                sub = by_term.get(t, empty)
-                if len(sub) > 1:
-                    sub = sub.assign(_first=sub["block_first"].map(
-                        lambda a: int(a[0]) if len(a) else -1)
-                    ).sort_values("_first")
-                    runs = [layout.decode_blocks(
-                        r.block_first, r.deltas, r.tfs, r.norms, bs)
-                        for r in sub.itertuples(index=False)]
-                    enc = layout.encode_blocks(
-                        np.concatenate([x[0] for x in runs]),
-                        np.concatenate([x[1] for x in runs]),
-                        np.concatenate([x[2] for x in runs]), bs)
-                    sub = pd.DataFrame({
-                        "col": [col], "term": [t], "shard": [0],
-                        "df": [enc["df"]],
-                        "block_first": [enc["block_first"]],
-                        "block_last": [enc["block_last"]],
-                        "block_max_tf": [enc["block_max_tf"]],
-                        "block_min_norm": [enc["block_min_norm"]],
-                        "deltas": [enc["deltas"]],
-                        "tfs": [enc["tfs"]],
-                        "norms": [enc["norms"]],
-                    })
-                cache[(col, t)] = sub
-            # same cap policy as the decoded-postings LRU (enable_local_cache
-            # configures it; default 4096), and never evict this query's keys
-            cap = getattr(self, "_local_cache_max", 4096)
-            current = {(col, t) for t in tokens}
-            evictable = [k for k in cache if k not in current]
-            while len(cache) > cap and evictable:
-                cache.pop(evictable.pop(0), None)
-        out = []
-        for t in tokens:
-            cache.move_to_end((col, t))
-            out.append(cache[(col, t)])
-        return pd.concat(out, ignore_index=True) if out else pd.DataFrame()
 
     def warm_terms(self, col: str, queries: list[str],
                    bitmaps: bool = False, batch_size: int = 512) -> int:
@@ -2318,7 +2283,7 @@ class SearchIndex:
         First touch of a term pays a pruned parquet scan whose cost is
         dominated by the bucket's fragment files, not the term's own
         postings (a tail term's fragments are per-shard rows smeared
-        across every file of its bucket).  ``_local_raw_rows`` /
+        across every file of its bucket).  ``_local_postings`` /
         ``_local_doc_ids`` already fetch all cache misses in ONE scan,
         so warming a workload's distinct terms in batches costs a few
         bucket scans instead of one scan per query: 512 distinct
@@ -2326,48 +2291,52 @@ class SearchIndex:
         5.6M-doc index.
 
         ``queries`` are raw query strings (or bare terms); they pass
-        through the column's analyzer.  ``bitmaps=True`` additionally
-        fills the ids-only LRU the bitmap family reads.  Returns the
-        number of distinct tokens warmed."""
+        through the column's analyzer, and their terms' decoded
+        postings fill the LRU both local evaluators score from.
+        ``bitmaps=True`` additionally fills the ids-only LRU the bitmap
+        family reads (from those decoded postings, without a second
+        scan).  Returns the number of distinct tokens warmed."""
         an = self.config.analyzer(col)
         toks = sorted({t for q in queries for t in an(q)})
         for i in range(0, len(toks), batch_size):
-            chunk = toks[i:i + batch_size]
-            self._local_raw_rows(col, chunk)
+            chunk = [(col, t) for t in toks[i:i + batch_size]]
+            self._local_postings(chunk)
             if bitmaps:
-                self._local_doc_ids([(col, t) for t in chunk])
+                self._local_doc_ids(chunk)
         return len(toks)
 
     def _local_phrase_scores(
         self,
         col: str,
         terms: list[str],
-        df_map: dict,
-        avgdl: dict,
-        n_docs: int,
+        env: _ScoringEnv,
         slop: int = 0,
         offsets: tuple | None = None,
     ) -> tuple[np.ndarray, np.ndarray]:
         """In-process phrase evaluation: posting rows (with positions)
-        fetched via the direct pyarrow path, decoded once into an LRU,
-        then the shared adjacency evaluator — no Spark job warm."""
+        fetched via the direct pyarrow path, decoded once into the
+        positions LRU, then the shared adjacency evaluator — no Spark
+        job warm."""
         if not self.config.with_positions:
             raise ValueError(
                 "phrase query requires an index built with "
                 "IndexConfig.with_positions=True")
-        if not hasattr(self, "_local_pos_cache"):
-            from collections import OrderedDict
-            self._local_pos_cache: "OrderedDict" = OrderedDict()
-        cache = self._local_pos_cache
-        bs = self.config.block_size
-        missing = [t for t in terms if (col, t) not in cache]
+        cache = self._caches.positions
+        keys = list(dict.fromkeys((col, t) for t in terms))
+        per_term, missing = {}, []
+        for k in keys:
+            hit = cache.get(k)
+            if hit is None:
+                missing.append(k)
+            else:
+                per_term[k[1]] = hit
         if missing:
             pdf = self._fetch_rows_arrow(
-                [(col, t) for t in missing],
-                ["col", "term", "block_first", "deltas", "tfs", "norms",
-                 "positions"])
-            for t in missing:
-                sub = pdf[(pdf["col"] == col) & (pdf["term"] == t)]
+                missing, ["col", "term", "block_first", "deltas", "tfs",
+                          "norms", "positions"])
+            bs = self.config.block_size
+            for k in missing:
+                sub = pdf[(pdf["col"] == col) & (pdf["term"] == k[1])]
                 runs = []
                 for r in sub.itertuples(index=False):
                     d, tf, nm = layout.decode_blocks(
@@ -2375,24 +2344,15 @@ class SearchIndex:
                     flat, _ = layout.decode_positions(
                         r.positions, np.frombuffer(r.tfs, np.uint32))
                     runs.append((d, tf, nm, flat))
-                cache[(col, t)] = _assemble_phrase_runs(runs) if runs \
+                per_term[k[1]] = cache.put(
+                    k, _assemble_phrase_runs(runs) if runs
                     else (np.empty(0, np.int64), np.empty(0, np.int64),
                           np.empty(0, np.uint8), np.empty(0, np.uint32),
-                          np.zeros(1, np.int64))
-            cap = getattr(self, "_local_cache_max", 4096)
-            current = {(col, t) for t in terms}
-            evictable = [k for k in cache if k not in current]
-            while len(cache) > cap and evictable:
-                cache.pop(evictable.pop(0), None)
-        per_term = {}
-        for t in terms:
-            cache.move_to_end((col, t))
-            per_term[t] = cache[(col, t)]
-        idf_map = {t: float(bm25.idf(df_map.get((col, t), 0), n_docs))
-                   for t in terms}
-        return _eval_phrase(list(terms), per_term, idf_map,
-                            avgdl.get(col, 1.0), self.config.k1,
-                            self.config.b, slop, offsets)
+                          np.zeros(1, np.int64)), set(keys))
+        return _eval_phrase(list(terms), per_term,
+                            {t: env.idf(col, t) for t in terms},
+                            env.avgdl[col], self.config.k1, self.config.b,
+                            slop, offsets)
 
     #: dense-lookup eligibility: a term qualifies when its (post-
     #: tombstone) posting count covers at least this fraction of the
@@ -2417,233 +2377,171 @@ class SearchIndex:
         profile).  A doc-indexed position array turns that into ONE
         vectorized fancy-index (0 = absent, else sparse position + 1),
         exact to the bit because scores are still read from the sparse
-        float64 vector.  Built once per (col, term) at first use;
-        invalidated with the other local caches (reload/free) and
-        keyed on the identity of the cached doc vector so a refilled
-        score-cache entry rebuilds it.
+        float64 vector.  Built once per (col, term) at first use into
+        the byte-capped dense LRU (a lookup larger than the whole cap
+        serves its query uncached), and keyed on the identity of the
+        cached doc vector so a refilled score-cache entry rebuilds it.
         """
         total = self.meta.total_docs or 0
         if d.size < self.LOCAL_DENSE_MIN_DOCS \
                 or d.size < total * self.LOCAL_DENSE_MIN_FRAC:
             return None
-        if not hasattr(self, "_local_dense_cache"):
-            from collections import OrderedDict
-            self._local_dense_cache: "OrderedDict" = OrderedDict()
-        cache = self._local_dense_cache
+        cache = self._caches.dense
         ent = cache.get(key)
         if ent is not None and ent[1] is d:
-            cache.move_to_end(key)
             return ent[0]
         pos = np.zeros(int(d[-1]) + 1, dtype=np.uint32)
         pos[d] = np.arange(1, d.size + 1, dtype=np.uint32)
-        cache[key] = (pos, d)
-        while len(cache) > 1 and sum(
-                e[0].nbytes for e in cache.values()) \
-                > self.LOCAL_DENSE_MAX_BYTES:
-            cache.popitem(last=False)
+        cache.put(key, (pos, d), nbytes=pos.nbytes)
         return pos
 
     @staticmethod
-    def _dense_gather(pos: np.ndarray, s: np.ndarray,
-                      cand: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """(hit_mask, contributions) of a dense-eligible term at the
-        candidate doc ids (exact float64 scores from the sparse
-        vector)."""
-        p = np.zeros(cand.size, dtype=np.int64)
-        m = cand < pos.size
-        p[m] = pos[cand[m]]
-        hit = p > 0
-        contrib = np.zeros(cand.size, dtype=np.float64)
-        contrib[hit] = s[p[hit] - 1]
+    def _gather(d: np.ndarray, s: np.ndarray, cand: np.ndarray,
+                dense: np.ndarray | None) -> tuple[np.ndarray, np.ndarray]:
+        """(hit_mask, contributions) of one atom at the candidate doc
+        ids — via its dense lookup when it has one, else searchsorted
+        into the sorted doc array; exact float64 scores either way."""
+        if dense is not None:
+            p = np.zeros(cand.size, dtype=np.int64)
+            m = cand < dense.size
+            p[m] = dense[cand[m]]
+            hit, idx = p > 0, p - 1
+        elif d.size:
+            idx = np.minimum(np.searchsorted(d, cand), d.size - 1)
+            hit = d[idx] == cand
+        else:
+            return np.zeros(cand.size, dtype=bool), np.zeros(cand.size)
+        contrib = np.zeros(cand.size)
+        contrib[hit] = s[idx[hit]]
         return hit, contrib
 
-    def _bm25_local_taat(
-        self, tokens: list[str], col: str, top_k: int, operator_or: bool,
-        statistics: Statistics | None,
-    ) -> list[tuple[int, float]]:
-        """Term-at-a-time local top-k over fully-decoded per-term caches.
-
-        The in-process equivalent of WAND at term granularity: terms run
-        in ascending-df order; after the anchor term sets θ (the kth
-        best running total), a later term admits NEW candidate docs only
-        if its max score plus the remaining terms' maxima could still
-        reach θ — hot keywords (idf ~0.04) fail that test and instead
-        contribute to existing candidates via a vectorized gather
-        (searchsorted into the cached sorted doc array).  No posting
-        block is decoded at query time at all; per-term decode happens
-        once into the LRU (tombstones applied there; reload() clears).
-        """
-        local = self.local_statistics({col: tokens})
-        use = statistics if statistics is not None and statistics.docs_freq \
-            else local
-        n_docs = use.total_num_docs or 1
-        df_map = {t: d for (t, c, d) in use.docs_freq if c == col}
-        for (t, c, d) in local.docs_freq:
-            if c == col:
-                df_map.setdefault(t, d)
-        avgdl = use.total_num_tokens.get(col, 0) / n_docs if n_docs else 1.0
-        k1, b = self.config.k1, self.config.b
-
-        atoms = [(col, t) for t in tokens]
-        raw = self._local_postings(atoms)
-        tomb = self._tombstone_array()
-        # per-term score vectors depend only on the index's own stats;
-        # cache them unless stats are injected (reload() clears)
-        cacheable = statistics is None or not statistics.docs_freq
-        if not hasattr(self, "_local_score_cache"):
-            from collections import OrderedDict
-            self._local_score_cache: "OrderedDict" = OrderedDict()
-        scache = self._local_score_cache
-        per_term = {}
-        tmax = {}
-        for t in tokens:
-            if cacheable and (col, t) in scache:
-                scache.move_to_end((col, t))
-                d, s, mx = scache[(col, t)]
-                per_term[t] = (d, s)
-                tmax[t] = mx
-                if d.size == 0 and not operator_or:
-                    return []
-                continue
-            d, tf, nm = raw[(col, t)]
-            if tomb.size and d.size:
-                mask = ~np.isin(d, tomb)
-                d, tf, nm = d[mask], tf[mask], nm[mask]
-            if d.size == 0:
-                if not operator_or:
-                    return []  # AND with an empty term matches nothing
-                per_term[t] = (d, np.empty(0))
+    def _local_atom_vectors(self, atoms: list, statistics: Statistics | None,
+                            alive_bitmap: bytes | None) -> tuple[dict, set]:
+        """atom -> (doc_ids, scores, max score) for one query's atoms —
+        the input of both local evaluators, with tombstones removed and
+        ``alive_bitmap`` applied (the max stays the unfiltered one, an
+        upper bound still).  Term vectors scored with the index's own
+        statistics live in the score LRU; a bare (None, term) atom sums
+        its per-column vectors; phrases come from the phrase evaluator.
+        Also returns the atoms whose vectors are the score LRU's own
+        arrays, which the dense lookup may key on."""
+        cols = self.config.columns
+        terms = list(dict.fromkeys(
+            (c, a[1]) for a in atoms if not qt.is_phrase_key(a)
+            for c in ([a[0]] if a[0] is not None else cols)))
+        env = self._scoring_env(
+            terms + [(a[1], t) for a in atoms if qt.is_phrase_key(a)
+                     for t in a[2]], statistics)
+        scache = self._caches.scores
+        tvec, need = {}, []
+        for k in terms:
+            hit = None if env.injected else scache.get(k)
+            if hit is None:
+                need.append(k)
             else:
-                idf = float(bm25.idf(df_map.get(t, 0), n_docs))
-                norm_d = bm25.doc_norm(FIELD_NORMS_TABLE[nm], avgdl or 1.0,
-                                       k1, b)
-                per_term[t] = (d, bm25.term_score(tf, idf, norm_d, k1))
-            # the per-term max is a scan over a possibly-multi-100k
-            # score vector: compute it once at fill, not per query
-            tmax[t] = float(per_term[t][1].max()) \
-                if per_term[t][1].size else 0.0
-            if cacheable:
-                scache[(col, t)] = per_term[t] + (tmax[t],)
-                # cap matches the decoded-postings LRU (4096): a 512
-                # cap thrashed on >512-distinct-term workloads, paying
-                # a per-query tail re-score; score vectors are the same
-                # order of bytes as the decoded postings they derive
-                # from, so the two caches grow together
-                while len(scache) > 4096:
-                    scache.popitem(last=False)
+                tvec[k] = hit
+        tomb = self._tombstone_array()
+        k1, b = self.config.k1, self.config.b
+        keep = set(terms)
+        for k, (d, tf, nm) in self._local_postings(need).items():
+            if tomb.size and d.size:
+                live = ~np.isin(d, tomb)
+                d, tf, nm = d[live], tf[live], nm[live]
+            s = np.empty(0, np.float64)
+            if d.size:
+                norm_d = bm25.doc_norm(FIELD_NORMS_TABLE[nm],
+                                       env.avgdl[k[0]], k1, b)
+                s = bm25.term_score(tf, env.idf(*k), norm_d, k1)
+            tvec[k] = (d, s, float(s.max()) if s.size else 0.0)
+            if not env.injected:
+                scache.put(k, tvec[k], keep)
 
-        order = sorted(per_term, key=lambda t: per_term[t][0].size)
+        vecs, stable = {}, set()
+        for a in atoms:
+            if qt.is_phrase_key(a):
+                d, s = self._local_phrase_scores(a[1], list(a[2]), env,
+                                                 a[3], a[4])
+                if tomb.size and d.size:
+                    live = ~np.isin(d, tomb)
+                    d, s = d[live], s[live]
+                v = (d, s, float(s.max()) if s.size else 0.0)
+            elif a[0] is not None:
+                v = tvec[a]
+                stable.add(a)
+            else:
+                parts = [tvec[(c, a[1])] for c in cols
+                         if tvec[(c, a[1])][0].size]
+                if len(parts) == 1:
+                    v = parts[0]
+                elif not parts:
+                    v = (np.empty(0, np.int64), np.empty(0, np.float64),
+                         0.0)
+                else:
+                    d, inv = np.unique(np.concatenate(
+                        [p[0] for p in parts]), return_inverse=True)
+                    s = np.bincount(inv, minlength=d.size,
+                                    weights=np.concatenate(
+                                        [p[1] for p in parts]))
+                    v = (d, s, float(s.max()))
+            if alive_bitmap is not None and v[0].size:
+                live = mask_for_row_ids(v[0], alive_bitmap)
+                v = (v[0][live], v[1][live], v[2])
+            vecs[a] = v
+        return vecs, (stable if alive_bitmap is None else set())
+
+    def _bm25_local_taat(self, keys: list, is_and: bool, vecs: dict,
+                         stable: set, top_k: int) -> list[tuple[int, float]]:
+        """Term-at-a-time top-k of one flat group: the AND or OR of
+        ``keys``, each occurrence adding its atom's score.
+
+        The in-process equivalent of WAND at term granularity: atoms run
+        in ascending-df order; after the anchor atom sets θ (the kth
+        best running total), a later OR atom admits NEW candidate docs
+        only if its max score plus the remaining atoms' maxima could
+        still reach θ — hot keywords (idf ~0.04) fail that test and
+        instead contribute to existing candidates via a vectorized
+        gather.  Exact: a skipped doc's total stays below θ (see
+        wand.py); pruning is off when a negative score (an injected df
+        above the doc count) would void that bound."""
+        order = sorted(keys, key=lambda a: vecs[a][0].size)
         if not order:
             return []
-        suffix = {}
-        run = 0.0
-        for t in reversed(order):
-            suffix[t] = run
-            run += tmax[t]
-
-        cand, total = per_term[order[0]]
-        cand = cand.copy()
-        total = total.copy()
+        prune = not is_and and all(vecs[a][2] >= 0 for a in order)
+        suffix = [0.0] * len(order)  # sum of later atoms' maxima
+        for i in range(len(order) - 1, 0, -1):
+            suffix[i - 1] = suffix[i] + vecs[order[i]][2]
 
         def kth(v):
-            return float(np.partition(v, -top_k)[-top_k]) \
-                if v.size >= top_k else 0.0
+            if prune and 0 < top_k <= v.size:
+                return float(np.partition(v, v.size - top_k)[v.size - top_k])
+            return -np.inf
 
-        theta = kth(total) if operator_or else 0.0
-        for t in order[1:]:
-            d, s = per_term[t]
-            dense = self._dense_pos_for((col, t), d) if cacheable else None
-            if not operator_or:
-                # intersection gather
-                if dense is not None:
-                    hit, contrib = self._dense_gather(dense, s, cand)
-                    cand = cand[hit]
-                    total = total[hit] + contrib[hit]
-                else:
-                    pos = np.searchsorted(d, cand)
-                    pos_c = np.minimum(pos, max(d.size - 1, 0))
-                    hit = (pos < d.size) & (d[pos_c] == cand) if d.size \
-                        else np.zeros(cand.size, dtype=bool)
-                    cand = cand[hit]
-                    total = total[hit] + s[pos_c[hit]]
-                if cand.size == 0:
-                    return []
-                continue
-            if tmax[t] + suffix[t] >= theta:
-                # new entrants possible: full sorted merge
-                md = np.concatenate([cand, d])
-                ms = np.concatenate([total, s])
-                uniq, inv = np.unique(md, return_inverse=True)
-                agg = np.zeros(uniq.size)
-                np.add.at(agg, inv, ms)
-                cand, total = uniq, agg
+        cand, total, _ = vecs[order[0]]
+        if is_and and not cand.size:
+            return []  # AND with an empty atom matches nothing
+        total = total.copy()
+        theta = kth(total)
+        for i, a in enumerate(order[1:], 1):
+            d, s, mx = vecs[a]
+            dense = self._dense_pos_for(a, d) if a in stable else None
+            if is_and or mx + suffix[i] < theta:
+                # gather onto existing candidates only; an OR atom's
+                # skipped docs are bounded below theta
+                hit, contrib = self._gather(d, s, cand, dense)
+                if is_and:
+                    cand, total = cand[hit], total[hit] + contrib[hit]
+                    if not cand.size:
+                        return []
+                    continue
+                total += contrib
             else:
-                # hot term: gather onto existing candidates only —
-                # skipped docs are bounded below theta (see wand.py)
-                if dense is not None:
-                    hit, contrib = self._dense_gather(dense, s, cand)
-                    total += contrib
-                else:
-                    pos = np.searchsorted(d, cand)
-                    pos_c = np.minimum(pos, max(d.size - 1, 0))
-                    hit = (pos < d.size) & (d[pos_c] == cand)
-                    total[hit] += s[pos_c[hit]]
+                # new entrants possible: full sorted merge
+                cand, inv = np.unique(np.concatenate([cand, d]),
+                                      return_inverse=True)
+                total = np.bincount(inv, weights=np.concatenate([total, s]),
+                                    minlength=cand.size)
             theta = max(theta, kth(total))
-        idx = np.lexsort((cand, -total))[:top_k]
-        return [(int(cand[i]), float(total[i])) for i in idx]
-
-    def _bm25_local_wand(
-        self, sentence: str, col: str, top_k: int, operator_or: bool,
-        alive_bitmap: bytes | None, statistics: Statistics | None,
-    ) -> list[tuple[int, float]]:
-        """Driver-side block-max WAND: the same make_wand_scorer used by
-        the distributed path, run per shard over cached raw rows — the
-        in-process analog of Tantivy's for_each_pruning, with top-k
-        early exit instead of full scoring."""
-        from tantivy_search_spark.search.wand import make_wand_scorer
-
-        tokens = list(dict.fromkeys(self.config.analyzer(col)(sentence)))
-        if not tokens:
-            return []
-        if alive_bitmap is None:
-            # fast path: term-at-a-time over decoded caches; the block
-            # scorer below handles filtered queries (the alive mask must
-            # apply before theta is derived)
-            return self._bm25_local_taat(tokens, col, top_k, operator_or,
-                                         statistics)
-        local = self.local_statistics({col: tokens})
-        use = statistics if statistics is not None and statistics.docs_freq \
-            else local
-        n_docs = use.total_num_docs or 1
-        df_map = {t: d for (t, c, d) in use.docs_freq if c == col}
-        for (t, c, d) in local.docs_freq:
-            if c == col:
-                df_map.setdefault(t, d)
-        idf_map = {t: float(bm25.idf(df_map.get(t, 0), n_docs))
-                   for t in tokens}
-        avgdl = use.total_num_tokens.get(col, 0) / n_docs if n_docs else 1.0
-        scorer = make_wand_scorer(
-            tokens=tokens, idf_map=idf_map, avgdl=avgdl,
-            k1=self.config.k1, b=self.config.b,
-            block_size=self.config.block_size, top_k=top_k,
-            and_mode=not operator_or, alive_bitmap=alive_bitmap,
-            tombstones=self._tombstone_array(),
-        )
-        rows = self._local_raw_rows(col, tokens)
-        if not len(rows):
-            return []
-        # shards are disjoint doc ranges, so the whole term's rows form
-        # one valid posting list: a single scorer call beats 15x
-        # per-shard python overhead (the bounds become global maxima —
-        # slightly looser pruning, no correctness change)
-        out = scorer(rows)
-        if not len(out):
-            return []
-        cat = out
-        d = cat["doc_id"].to_numpy(dtype=np.int64)
-        s = cat["score"].to_numpy(dtype=np.float64)
-        order = np.lexsort((d, -s))[:top_k]
-        return [(int(d[i]), float(s[i])) for i in order]
+        return _top_k(cand, total, top_k)
 
     #: auto-tier threshold: serve from the in-process tier while the
     #: postings fit a driver comfortably; beyond it the corpus is the
@@ -2653,15 +2551,16 @@ class SearchIndex:
     def _postings_bytes(self) -> int:
         """On-disk size of the postings tables (cached per reader
         generation — reload() drops it)."""
-        if getattr(self, "_postings_bytes_cache", None) is None:
+        c = self._caches
+        if c.postings_bytes is None:
             total = 0
             for root, _dirs, files in os.walk(
                     os.path.join(self.index_path, POSTINGS_DIR)):
                 for f in files:
                     if f.endswith(".parquet"):
                         total += os.path.getsize(os.path.join(root, f))
-            self._postings_bytes_cache = total
-        return self._postings_bytes_cache
+            c.postings_bytes = total
+        return c.postings_bytes
 
     def bm25_search_auto(
         self,
@@ -2688,8 +2587,6 @@ class SearchIndex:
         """
         if self.spark is None or \
                 self._postings_bytes() <= self.AUTO_LOCAL_MAX_BYTES:
-            if not hasattr(self, "_local_cache"):
-                self.enable_local_cache()
             return self.bm25_search_local(
                 sentence, column_names=column_names, top_k=top_k,
                 operator_or=operator_or, alive_bitmap=alive_bitmap,
@@ -2715,28 +2612,32 @@ class SearchIndex:
     ) -> list[tuple[int, float]]:
         """In-process hot path: same tokenizers, stats, and scoring math
         as ``bm25_search``, but decode + score run on the driver against
-        an LRU of decoded query-term postings — no Spark job after warm.
+        LRUs of decoded postings and per-term score vectors — no Spark
+        job after warm.
 
         This mirrors the reference's deployment shape (an embedded
         engine answering point queries in-process,
         src/search/implements/api_myscale) and restores its latency
         class for working sets that fit one machine; the distributed
         ``bm25_search`` / ``bm25_search_batch`` paths own the corpus
-        sizes where that stops being true.  Falls back to the
-        distributed path for non-flat NLQ trees.
+        sizes where that stops being true.
+
+        Two exact evaluators: a query that is one flat group (an AND,
+        or an OR of any number of atoms) runs term-at-a-time
+        (``_bm25_local_taat``); every other shape (MustNot, boosts,
+        nested or several AND groups) runs the tree evaluator.  Both
+        read per-atom score vectors from ``_local_atom_vectors``.
+        ``use_wand`` selects the block-max scorer on the distributed
+        tier only; here it does not change the answer or the path.
 
         Returns [(row_id, score)] in (score desc, row_id asc) order.
         """
         cols = [c for c in (column_names or self.config.columns)
                 if c in self.config.columns]
-        if use_wand and not enable_nlq and len(cols) == 1:
-            return self._bm25_local_wand(sentence, cols[0], top_k,
-                                         operator_or, alive_bitmap,
-                                         statistics)
         analyzers = self._analyzers()
         if enable_nlq:
-            # phrase_nodes matches the distributed parse so the non-flat
-            # fallback below re-runs the identical tree
+            # phrase_nodes matches the distributed parse, so both tiers
+            # evaluate the identical tree
             tree = qt.parse_nlq(sentence, cols, analyzers,
                                 conjunction_by_default=not operator_or,
                                 phrase_nodes=self.config.with_positions,
@@ -2744,261 +2645,35 @@ class SearchIndex:
         else:
             tokens_by_col = {c: analyzers[c](sentence) for c in cols}
             tree = qt.standard_query_tree(tokens_by_col, operator_or)
-        if tree is None:
-            return []
-        groups = qt.flat_groups(tree)
-        if groups is None:
-            # nested NLQ (MustNot, boosts, nested groups): in-process
-            # tree evaluator — open_local() indexes have no Spark tier
-            # to fall back to (ADVICE r3)
-            return self._bm25_local_tree(tree, top_k, alive_bitmap,
-                                         statistics)
-
-        # expand col=None atoms (bare NLQ terms) to concrete columns; a
-        # None atom inside an AND group has no flat expansion -> use
-        # the in-process tree evaluator
-        concrete: list[tuple[list, bool]] = []
-        for keys, is_and in groups:
-            if is_and and any(not qt.is_phrase_key(k) and k[0] is None
-                              for k in keys):
-                return self._bm25_local_tree(tree, top_k, alive_bitmap,
-                                             statistics)
-            ks: list = []
-            for k in keys:
-                if qt.is_phrase_key(k):
-                    ks.append(k)
-                elif k[0] is None:
-                    # Should-across-columns: one OR group per column
-                    for cc in cols:
-                        concrete.append(([(cc, k[1])], False))
-                else:
-                    ks.append(k)
-            if ks:
-                concrete.append((ks, is_and))
-
-        all_keys = {a for ks, _ in concrete for a in ks}
-        phrase_atoms = sorted((a for a in all_keys if qt.is_phrase_key(a)),
-                              key=repr)
-        term_atoms = sorted(a for a in all_keys if not qt.is_phrase_key(a))
-        atoms = term_atoms + phrase_atoms
-        # scored (doc_ids, scores, max) vectors are shared with the WAND
-        # local path's LRU — same key, same post-tombstone contents;
-        # reload() (and therefore delete_row_ids) clears it
-        cacheable = statistics is None or not statistics.docs_freq
-        if not hasattr(self, "_local_score_cache"):
-            from collections import OrderedDict
-            self._local_score_cache = OrderedDict()
-        scache = self._local_score_cache
-        need = [a for a in term_atoms
-                if not (cacheable and a in scache)]
-        postings = self._local_postings(need)
-
-        stats_tokens: dict[str, list[str]] = {c: [] for c in
-                                              self.config.columns}
-        for (cc, t) in term_atoms:
-            stats_tokens[cc].append(t)
-        for a in phrase_atoms:
-            stats_tokens[a[1]].extend(a[2])
-        local = self.local_statistics(stats_tokens)
-        use = statistics if statistics is not None and statistics.docs_freq \
-            else local
-        n_docs = use.total_num_docs or 1
-        df_map = {(c, t): d for (t, c, d) in use.docs_freq}
-        for (t, c, d) in local.docs_freq:
-            df_map.setdefault((c, t), d)
-        avgdl = {c: (use.total_num_tokens.get(c, 0) / n_docs)
-                 for c in self.config.columns}
-
-        tomb = self._tombstone_array()
-        k1, b = self.config.k1, self.config.b
-        per_atom: dict = {}
-        for a in atoms:
-            if qt.is_phrase_key(a):
-                d, s = self._local_phrase_scores(
-                    a[1], list(a[2]), df_map, avgdl, n_docs, slop=a[3],
-                    offsets=a[4])
-                if tomb.size and d.size:
-                    mask = ~np.isin(d, tomb)
-                    d, s = d[mask], s[mask]
-            elif cacheable and a in scache:
-                scache.move_to_end(a)
-                d, s, _ = scache[a]
-            else:
-                d, t, m = postings[a]
-                if tomb.size and d.size:
-                    mask = ~np.isin(d, tomb)
-                    d, t, m = d[mask], t[mask], m[mask]
-                if d.size:
-                    idf = float(bm25.idf(df_map.get((a[0], a[1]), 0),
-                                         n_docs))
-                    norm_d = bm25.doc_norm(FIELD_NORMS_TABLE[m],
-                                           avgdl.get(a[0], 1.0) or 1.0,
-                                           k1, b)
-                    s = bm25.term_score(t, idf, norm_d, k1)
-                else:
-                    s = np.empty(0, np.float64)
-                if cacheable:
-                    scache[a] = (d, s,
-                                 float(s.max()) if s.size else 0.0)
-                    # same 4096 cap rationale as the TAAT site
-                    while len(scache) > 4096:
-                        scache.popitem(last=False)
-            if alive_bitmap is not None and d.size:
-                mask = mask_for_row_ids(d, alive_bitmap)
-                d, s = d[mask], s[mask]
-            per_atom[a] = (d, s)
-
-        if len(concrete) == 1:
-            # single flat group (the standard AND / OR query): skip the
-            # dense (docs x atoms) matrices — one concat + unique +
-            # bincount replaces per-atom searchsorted scatter, ~2x on
-            # the warm point-query path
-            ks, is_and = concrete[0]
-            uks = list(dict.fromkeys(ks))
-            ds = np.concatenate([per_atom[a][0] for a in ks])
-            if ds.size == 0:
-                return []
-            ss = np.concatenate([per_atom[a][1] for a in ks])
-            docs, inv = np.unique(ds, return_inverse=True)
-            total = np.bincount(inv, weights=ss, minlength=docs.size)
-            if is_and and len(uks) > 1:
-                if len(uks) == len(ks):
-                    cnt = np.bincount(inv, minlength=docs.size)
-                else:  # duplicate atoms score twice but count once
-                    du = np.concatenate([per_atom[a][0] for a in uks])
-                    cnt = np.bincount(np.searchsorted(docs, du),
-                                      minlength=docs.size)
-                keep = np.flatnonzero(cnt == len(uks))
-                docs, total = docs[keep], total[keep]
-                if docs.size == 0:
-                    return []
-            if total.size > top_k * 8:
-                kth = np.partition(total, total.size - top_k)[
-                    total.size - top_k]
-                cand = np.flatnonzero(total >= kth)
-            else:
-                cand = np.arange(total.size)
-            order = cand[np.lexsort((docs[cand], -total[cand]))][:top_k]
-            return [(int(docs[i]), float(total[i])) for i in order]
-
-        # dense per-doc score/presence matrices over the candidate set
-        all_docs = np.unique(np.concatenate(
-            [per_atom[a][0] for a in atoms])) if atoms else np.empty(0)
-        if all_docs.size == 0:
-            return []
-        nd = all_docs.shape[0]
-        na = len(atoms)
-        S = np.zeros((nd, na))
-        M = np.zeros((nd, na), dtype=bool)
-        apos = {a: i for i, a in enumerate(atoms)}
-        for a in atoms:
-            d, s = per_atom[a]
-            if d.size:
-                idx = np.searchsorted(all_docs, d)
-                S[idx, apos[a]] = s
-                M[idx, apos[a]] = True
-        total = np.zeros(nd)
-        matched = np.zeros(nd, dtype=bool)
-        for ks, is_and in concrete:
-            ai = [apos[a] for a in ks]
-            gm = M[:, ai].all(axis=1) if is_and else M[:, ai].any(axis=1)
-            total += S[:, ai].sum(axis=1) * gm
-            matched |= gm
-        sel = np.flatnonzero(matched)
-        order = np.lexsort((all_docs[sel], -total[sel]))[:top_k]
-        pick = sel[order]
-        return [(int(all_docs[i]), float(total[i])) for i in pick]
-
-    def _bm25_local_tree(
-        self,
-        tree,
-        top_k: int,
-        alive_bitmap: bytes | None,
-        statistics: Statistics | None,
-    ) -> list[tuple[int, float]]:
-        """In-process evaluator for arbitrary NLQ trees (MustNot, boost
-        factors, nested groups) — the numpy twin of
-        querytree.compile_tree_map, so open_local() indexes answer every
-        query shape without a Spark tier (ADVICE r3: the old fallback
-        raised through _require_spark and killed whole SearchPool
-        batches)."""
-        atoms = qt.collect_atoms(tree)
+        atoms = qt.collect_atoms(tree) if tree is not None else []
         if not atoms:
             return []
-        cfg = self.config
-        phrase_atoms = [a for a in atoms if qt.is_phrase_key(a)]
-        term_atoms = [a for a in atoms if not qt.is_phrase_key(a)]
-        # concrete (col, term) fetches; a (None, term) atom reads every
-        # column and sums matches per doc (compile subs semantics)
-        fetch = sorted({(c, t) for (c0, t) in term_atoms
-                        for c in ([c0] if c0 is not None else cfg.columns)})
-        postings = self._local_postings(fetch)
+        vecs, stable = self._local_atom_vectors(atoms, statistics,
+                                                alive_bitmap)
+        groups = qt.flat_groups(tree)
+        if groups and (len(groups) == 1
+                       or not any(is_and for _, is_and in groups)):
+            # OR groups sum their matched atoms: one OR over all of them
+            return self._bm25_local_taat(
+                [k for ks, _ in groups for k in ks],
+                len(groups) == 1 and groups[0][1], vecs, stable, top_k)
+        return self._bm25_local_tree(tree, vecs, top_k)
 
-        stats_tokens: dict[str, list[str]] = {c: [] for c in cfg.columns}
-        for (cc, t) in fetch:
-            stats_tokens[cc].append(t)
-        for a in phrase_atoms:
-            stats_tokens[a[1]].extend(a[2])
-        local = self.local_statistics(stats_tokens)
-        use = statistics if statistics is not None and statistics.docs_freq \
-            else local
-        n_docs = use.total_num_docs or 1
-        df_map = {(c, t): d for (t, c, d) in use.docs_freq}
-        for (t, c, d) in local.docs_freq:
-            df_map.setdefault((c, t), d)
-        avgdl = {c: (use.total_num_tokens.get(c, 0) / n_docs)
-                 for c in cfg.columns}
-        tomb = self._tombstone_array()
-        k1, b = cfg.k1, cfg.b
-
-        def concrete_scores(cc: str, t: str):
-            d, tf, m = postings[(cc, t)]
-            if not d.size:
-                return d, np.empty(0, np.float64)
-            idf = float(bm25.idf(df_map.get((cc, t), 0), n_docs))
-            norm_d = bm25.doc_norm(FIELD_NORMS_TABLE[m],
-                                   avgdl.get(cc, 1.0) or 1.0, k1, b)
-            return d, bm25.term_score(tf, idf, norm_d, k1)
-
-        per_atom: dict = {}
-        for a in atoms:
-            if qt.is_phrase_key(a):
-                d, s = self._local_phrase_scores(
-                    a[1], list(a[2]), df_map, avgdl, n_docs, slop=a[3],
-                    offsets=a[4])
-            elif a[0] is not None:
-                d, s = concrete_scores(a[0], a[1])
-            else:
-                parts = [concrete_scores(cc, a[1]) for cc in cfg.columns]
-                parts = [(d, s) for d, s in parts if d.size]
-                if parts:
-                    d = np.concatenate([p[0] for p in parts])
-                    s = np.concatenate([p[1] for p in parts])
-                    d, inv = np.unique(d, return_inverse=True)
-                    tot = np.zeros(d.size)
-                    np.add.at(tot, inv, s)
-                    s = tot
-                else:
-                    d = np.empty(0, np.int64)
-                    s = np.empty(0, np.float64)
-            if tomb.size and d.size:
-                mask = ~np.isin(d, tomb)
-                d, s = d[mask], s[mask]
-            if alive_bitmap is not None and d.size:
-                mask = mask_for_row_ids(d, alive_bitmap)
-                d, s = d[mask], s[mask]
-            per_atom[a] = (d, s)
-
-        all_docs = np.unique(np.concatenate(
-            [per_atom[a][0] for a in atoms])) if atoms else np.empty(0)
+    def _bm25_local_tree(self, tree, vecs: dict,
+                         top_k: int) -> list[tuple[int, float]]:
+        """In-process evaluator for arbitrary NLQ trees (MustNot, boost
+        factors, nested groups) — the numpy twin of
+        querytree.compile_tree_map over dense (candidate doc x atom)
+        score/match matrices, so open_local() indexes answer every
+        query shape without a Spark tier."""
+        all_docs = np.unique(np.concatenate([v[0] for v in vecs.values()]))
         if all_docs.size == 0:
             return []
         nd = all_docs.shape[0]
-        apos = {a: i for i, a in enumerate(atoms)}
-        S = np.zeros((nd, len(atoms)))
-        M = np.zeros((nd, len(atoms)), dtype=bool)
-        for a in atoms:
-            d, s = per_atom[a]
+        apos = {a: i for i, a in enumerate(vecs)}
+        S = np.zeros((nd, len(vecs)))
+        M = np.zeros((nd, len(vecs)), dtype=bool)
+        for a, (d, s, _) in vecs.items():
             if d.size:
                 idx = np.searchsorted(all_docs, d)
                 S[idx, apos[a]] = s
@@ -3043,11 +2718,7 @@ class SearchIndex:
 
         matched, total = walk(tree)
         sel = np.flatnonzero(matched)
-        if sel.size == 0:
-            return []
-        order = np.lexsort((all_docs[sel], -total[sel]))[:top_k]
-        pick = sel[order]
-        return [(int(all_docs[i]), float(total[i])) for i in pick]
+        return _top_k(all_docs[sel], total[sel], top_k)
 
     # ---------------------------------------------------------------- bitmaps
     def _doc_ids_for_terms(self, col: str, tokens: list[str]) -> DataFrame:
@@ -3057,7 +2728,7 @@ class SearchIndex:
             return self._require_spark().createDataFrame([], "row_id long")
         uniq = sorted(set(tokens))
         cache_key = ("idsdf", col, tuple(uniq))
-        hit = self._plan_cache.get(cache_key)
+        hit = self._caches.plans.get(cache_key)
         if hit is not None:
             return hit
         buckets = sorted({term_bucket(t, self.config.n_buckets) for t in uniq})
@@ -3065,55 +2736,39 @@ class SearchIndex:
             f"bucket IN ({_sql_int_list(buckets)}) "
             f"AND term IN ({_sql_str_list(uniq)}) "
             f"AND col = '{col}'"))
-        out = self._decode_distinct_ids(cand)
-        if len(self._plan_cache) >= self._plan_cache_max:
-            self._plan_cache.clear()
-        self._plan_cache[cache_key] = out
-        return out
+        return self._caches.plans.put(cache_key,
+                                      self._decode_distinct_ids(cand))
 
     # -- bitmap result cache (reference CACHE_FOR_SKIP_INDEX,
     # constants.rs:25-30: capacity-1000 cache keyed by reader address +
-    # query + use_regex; the reader-address component becomes a reload
-    # generation counter here, so stale entries die on commit/delete)
+    # query + use_regex; the reader-address component is the cache
+    # object itself here — reload() replaces it, so stale entries die
+    # on commit/delete)
     BITMAP_CACHE_CAPACITY = 1000
 
     def _bitmap_cached(self, key: tuple, compute) -> bytes:
-        if not hasattr(self, "_bitmap_cache"):
-            from collections import OrderedDict
-            self._bitmap_cache: "OrderedDict" = OrderedDict()
-            self._reload_gen = getattr(self, "_reload_gen", 0)
-        full = (self._reload_gen,) + key
-        cache = self._bitmap_cache
-        if full in cache:
-            cache.move_to_end(full)
-            return cache[full]
-        out = compute()
-        cache[full] = out
-        while len(cache) > self.BITMAP_CACHE_CAPACITY:
-            cache.popitem(last=False)
-        return out
+        cache = self._caches.bitmaps
+        out = cache.get(key)
+        return out if out is not None else cache.put(key, compute())
 
     def _local_doc_ids(self, atoms: list[tuple[str, str]]) -> dict:
         """(col, term) -> doc_ids only (unsorted), the embedded twin of
         the Spark tier's ``_decode_distinct_ids``: the parquet fetch
         prunes tfs/norms and the decode skips them too, so a cold hot
         -term bitmap touches ~1/3 the bytes of the full-triple path.
-        Separate LRU from ``_local_cache``; a triple already decoded
-        for BM25 is reused instead of re-fetching."""
-        if not hasattr(self, "_local_ids_cache"):
-            from collections import OrderedDict
-            self._local_ids_cache: "OrderedDict" = OrderedDict()
-        cache = self._local_ids_cache
-        full = getattr(self, "_local_cache", {})
+        Separate LRU from the decoded-postings one; a triple already
+        decoded for BM25 is reused instead of re-fetching."""
+        cache, full = self._caches.ids, self._caches.postings
         out, missing = {}, []
         for a in atoms:
-            if a in cache:
-                cache.move_to_end(a)
-                out[a] = cache[a]
-            elif a in full:
-                out[a] = full[a][0]
-            else:
+            hit = cache.get(a)
+            if hit is None:
+                hit = full.get(a)
+                hit = None if hit is None else hit[0]
+            if hit is None:
                 missing.append(a)
+            else:
+                out[a] = hit
         if missing:
             pdf = self._fetch_rows_arrow(
                 missing, ["col", "term", "block_first", "deltas"])
@@ -3124,21 +2779,15 @@ class SearchIndex:
                 if key in got:
                     got[key].append(layout.decode_doc_ids(
                         r.block_first, r.deltas, bs))
-            for a in missing:
-                runs = got[a]
+            keep = set(atoms)
+            for a, runs in got.items():
                 ids = (np.concatenate(runs) if runs
                        else np.empty(0, np.int64))
                 if ids.size and int(ids.max()) < 2**31:
                     # int32 halves the bytes the bitmap scatter reads;
                     # doc ids exceed 2**31 only past ~2e9 docs/index
                     ids = ids.astype(np.int32)
-                cache[a] = ids
-                out[a] = ids
-            current = set(atoms)
-            evictable = [k for k in cache if k not in current]
-            while (len(cache) > getattr(self, "_local_cache_max", 4096)
-                   and evictable):
-                cache.pop(evictable.pop(0), None)
+                out[a] = cache.put(a, ids, keep)
         return out
 
     #: decoded sidecar bitmaps kept in memory (bytes, not entries — one
@@ -3153,10 +2802,10 @@ class SearchIndex:
         append/compact is ignored wholesale (those save a new meta with
         a new committed_fence / total_docs).  Deletes don't retire it —
         tombstones are masked at serve time."""
-        sc = getattr(self, "_sidecar", None)
-        if sc is not None:
-            return sc
-        sc = {"terms": frozenset(), "dset": None, "cache": None, "bytes": 0}
+        c = self._caches
+        if c.sidecar is not None:
+            return c.sidecar
+        sc = {"terms": frozenset(), "dset": None, "cache": None}
         path = os.path.join(self.index_path, BITMAPS_DIR)
         try:
             with open(os.path.join(path, "_sidecar.json")) as f:
@@ -3169,14 +2818,14 @@ class SearchIndex:
                 dset = ds.dataset(path, format="parquet")
                 tbl = dset.to_table(columns=["col", "term"],
                                     filter=ds.field("chunk") == 0)
-                from collections import OrderedDict
                 sc = {"terms": frozenset(
                           zip(tbl.column("col").to_pylist(),
                               tbl.column("term").to_pylist())),
-                      "dset": dset, "cache": OrderedDict(), "bytes": 0}
+                      "dset": dset,
+                      "cache": _LRU(max_bytes=self.SIDECAR_CACHE_BYTES)}
         except (OSError, ValueError, KeyError):
             pass
-        self._sidecar = sc
+        c.sidecar = sc
         return sc
 
     def _sidecar_bitmaps(self, atoms: list[tuple[str, str]]) -> dict:
@@ -3192,34 +2841,25 @@ class SearchIndex:
         out, missing = {}, []
         cache = sc["cache"]
         for a in want:
-            if a in cache:
-                cache.move_to_end(a)
-                out[a] = cache[a]
-            else:
+            hit = cache.get(a)
+            if hit is None:
                 missing.append(a)
+            else:
+                out[a] = hit
         if missing:
             import pyarrow.dataset as ds
             expr = (ds.field("col").isin(sorted({c for c, _ in missing}))
                     & ds.field("term").isin(sorted({t for _, t in missing})))
             pdf = sc["dset"].to_table(filter=expr).to_pandas()
-            for (c, t), grp in pdf.groupby(["col", "term"], sort=False):
-                a = (c, t)
-                if a in cache:
+            keep = set(want)
+            for a, grp in pdf.groupby(["col", "term"], sort=False):
+                if a in out or a not in keep:
                     continue
                 grp = grp.sort_values("chunk")
                 arr = np.frombuffer(b"".join(grp["data"]), dtype=np.uint8)
                 if arr.nbytes != int(grp["total"].iloc[0]):
                     continue  # torn sidecar row group: fall back to decode
-                cache[a] = arr
-                sc["bytes"] += arr.nbytes
-            for a in missing:
-                if a in cache:
-                    cache.move_to_end(a)
-                    out[a] = cache[a]
-            current = set(want)
-            evictable = [k for k in cache if k not in current]
-            while sc["bytes"] > self.SIDECAR_CACHE_BYTES and evictable:
-                sc["bytes"] -= cache.pop(evictable.pop(0)).nbytes
+                out[a] = cache.put(a, arr, keep, nbytes=arr.nbytes)
         return out
 
     def _local_ids_for_terms(self, col: str, tokens: list[str]) -> bytes:

@@ -105,7 +105,7 @@ def _worker_term_bitmap(item):
     col, term, bypass = item
     try:
         if bypass:
-            getattr(_WORKER_INDEX, "_bitmap_cache", {}).clear()
+            _WORKER_INDEX._caches.bitmaps.clear()
         return _WORKER_INDEX.query_term_bitmap(col, term)
     except Exception as e:  # noqa: BLE001 — worker boundary
         return PoolQueryError(f"{col}:{term}", f"{type(e).__name__}: {e}")
@@ -196,7 +196,7 @@ def _worker_granule_sweep(chunk):
     for col, term, step, total_rows, bypass, vectorized in chunk:
         try:
             if bypass:
-                getattr(_WORKER_INDEX, "_bitmap_cache", {}).clear()
+                _WORKER_INDEX._caches.bitmaps.clear()
             if vectorized:
                 h = _WORKER_INDEX.query_term_granules(
                     col, term, step, total_rows)

@@ -29,8 +29,8 @@ def _rows(n=64, base=0):
 
 def _no_sidecar(ix):
     """Force the decode path on a reader (sidecar-off control)."""
-    ix._sidecar = {"terms": frozenset(), "dset": None,
-                   "cache": None, "bytes": 0}
+    ix._caches.sidecar = {"terms": frozenset(), "dset": None,
+                          "cache": None}
     return ix
 
 
@@ -75,8 +75,8 @@ class TestBitmapSidecar:
             assert _bitmap(ix, kind, arg) == _bitmap(ctl, kind, arg), \
                 (kind, arg)
         # the hot term really came from the sidecar cache, not decode
-        assert ("body", "alpha") in ix._sidecar["cache"]
-        assert ("body", "alpha") not in getattr(ix, "_local_ids_cache", {})
+        assert ("body", "alpha") in ix._caches.sidecar["cache"]
+        assert ("body", "alpha") not in ix._caches.ids
 
     def test_sidecar_bitmap_bytes(self, sidecar_index):
         """alpha is in every doc: 64 set bits = 8 x 0xff."""

@@ -372,10 +372,27 @@ class TestReaderClose:
         ix.query_term_bitmap("col1", "Ancient")
         ix.close()
         assert ix._stats_cache is None
-        assert not ix._local_cache and not ix._bitmap_cache
+        assert not ix._caches.postings and not ix._caches.bitmaps
         after = ix.bm25_search_local("ancient rise", top_k=5,
                                      operator_or=True)
         assert after == before
+
+    def test_close_keeps_open_local_reader_usable(self, corpus_a_index):
+        """An open_local() reader has no Spark stats lookup to fall back
+        to: after close() it reloads its term dictionary itself, so a
+        query, and reload() then a query, answer as before."""
+        from tantivy_search_spark.search.engine import SearchIndex
+        ix = SearchIndex.open_local(corpus_a_index.index_path)
+        before = ix.bm25_search_local("ancient rise", top_k=5,
+                                      operator_or=True)
+        assert before
+        ix.close()
+        assert ix.bm25_search_local("ancient rise", top_k=5,
+                                    operator_or=True) == before
+        ix.close()
+        ix.reload()
+        assert ix.bm25_search_local("ancient rise", top_k=5,
+                                    operator_or=True) == before
 
 
 class TestEncodeBlocksMany:

@@ -93,11 +93,9 @@ class TestLocalSearch:
         warm = [ix.bm25_search_local(q, top_k=5, use_wand=True)
                 for q in queries]
         warm_bm = ix.query_term_bitmap(ix.config.columns[0], "ancient")
-        for attr in ("_local_raw_cache", "_local_ids_cache",
-                     "_local_cache", "_local_score_cache",
-                     "_bitmap_cache"):
-            if hasattr(ix, attr):
-                getattr(ix, attr).clear()
+        for cache in (ix._caches.ids, ix._caches.postings,
+                      ix._caches.scores, ix._caches.bitmaps):
+            cache.clear()
         cold = [ix.bm25_search_local(q, top_k=5, use_wand=True)
                 for q in queries]
         cold_bm = ix.query_term_bitmap(ix.config.columns[0], "ancient")
@@ -140,7 +138,7 @@ class TestLocalSearch:
         assert got == want
         # over-cap entries beyond the current query may remain pinned
         # only for this query; the cache never exceeds cap + atoms
-        assert len(ix._local_cache) <= 2 + 3 * 5
+        assert len(ix._caches.postings) <= 2 + 3 * 5
 
 
 class TestAutoRoute:
@@ -177,9 +175,9 @@ class TestAutoRoute:
     def test_size_cache_resets_on_reload(self, corpus_a_index):
         ix = corpus_a_index
         n = ix._postings_bytes()
-        assert ix._postings_bytes_cache == n
+        assert ix._caches.postings_bytes == n
         ix.reload()
-        assert ix._postings_bytes_cache is None
+        assert ix._caches.postings_bytes is None
         assert ix._postings_bytes() == n
 
 
@@ -228,8 +226,7 @@ class TestDenseHotTermGather:
         # corpus a is tiny, so drop the posting-count floor to let the
         # dense path trigger ('the' covers >= 25% of col3 docs)
         monkeypatch.setattr(type(ix), "LOCAL_DENSE_MIN_DOCS", 1)
-        if hasattr(ix, "_local_dense_cache"):
-            ix._local_dense_cache.clear()
+        ix._caches.dense.clear()
         # single column: the TAAT/WAND local shortcut (where the
         # dense gather lives) only runs for one-column queries
         for s, op in [("the ancient", False), ("the ancient", True),
@@ -243,7 +240,7 @@ class TestDenseHotTermGather:
                                    column_names=["col3"]).collect()]
             assert got == want, (s, op)
         # the dense cache actually filled (the path ran, not skipped)
-        cache = getattr(ix, "_local_dense_cache", {})
+        cache = ix._caches.dense
         assert any(k[1] == "the" for k in cache), list(cache)
 
     def test_dense_matches_sparse_forced(self, corpus_a_index,
@@ -253,8 +250,7 @@ class TestDenseHotTermGather:
         ix = corpus_a_index
         ix.enable_local_cache()
         monkeypatch.setattr(type(ix), "LOCAL_DENSE_MIN_DOCS", 1)
-        if hasattr(ix, "_local_dense_cache"):
-            ix._local_dense_cache.clear()
+        ix._caches.dense.clear()
         q, op = "the ancient empires", True
         dense = ix.bm25_search_local(q, top_k=10, operator_or=op,
                                      column_names=["col3"],
@@ -262,8 +258,7 @@ class TestDenseHotTermGather:
         old = type(ix).LOCAL_DENSE_MIN_FRAC
         try:
             type(ix).LOCAL_DENSE_MIN_FRAC = 2.0  # nothing qualifies
-            if hasattr(ix, "_local_dense_cache"):
-                ix._local_dense_cache.clear()
+            ix._caches.dense.clear()
             sparse = ix.bm25_search_local(q, top_k=10, operator_or=op,
                                           column_names=["col3"],
                                           use_wand=True)
@@ -298,11 +293,11 @@ class TestDenseHotTermGather:
         before = ix.bm25_search_local("the ancient", top_k=10,
                                       operator_or=True, use_wand=True)
         assert before
-        assert getattr(ix, "_local_dense_cache", {})  # dense path ran
+        assert ix._caches.dense  # dense path ran
         victim = before[0][0]
         ix.delete_row_ids([victim])
         ix.reload()
-        assert not getattr(ix, "_local_dense_cache", {})  # invalidated
+        assert not ix._caches.dense  # invalidated
         after = ix.bm25_search_local("the ancient", top_k=10,
                                      operator_or=True, use_wand=True)
         assert victim not in [r for r, _ in after]
@@ -310,3 +305,48 @@ class TestDenseHotTermGather:
                 ix.bm25_search("the ancient", top_k=10,
                                operator_or=True).collect()]
         assert [(r, round(s, 6)) for r, s in after] == want
+
+    def test_dense_lru_byte_cap(self, corpus_a_index, monkeypatch):
+        """The dense LRU counts its bytes as it goes; a lookup larger
+        than the whole cap serves its query but is not cached."""
+        from tantivy_search_spark.search.engine import SearchIndex
+        monkeypatch.setattr(SearchIndex, "LOCAL_DENSE_MIN_DOCS", 1)
+        ix = SearchIndex.open_local(corpus_a_index.index_path)
+        kw = dict(top_k=5, column_names=["col3"], use_wand=True)
+        queries = [("the ancient", True), ("the moral", False)]
+        want = [ix.bm25_search_local(q, operator_or=op, **kw)
+                for q, op in queries]
+        cache = ix._caches.dense
+        assert cache, "dense path did not run"
+        assert cache.nbytes == sum(cache.get(k)[0].nbytes for k in cache)
+        monkeypatch.setattr(SearchIndex, "LOCAL_DENSE_MAX_BYTES",
+                            cache.nbytes // len(cache) - 1)
+        ix.reload()  # caches are rebuilt with the smaller cap
+        got = [ix.bm25_search_local(q, operator_or=op, **kw)
+               for q, op in queries]
+        assert got == want
+        assert not ix._caches.dense and ix._caches.dense.nbytes == 0
+
+
+class TestLRU:
+    def test_byte_cap_evicts_to_zero_and_skips_oversize(self):
+        from tantivy_search_spark.search.engine import _LRU
+        c = _LRU(max_bytes=100)
+        c.put("a", 1, nbytes=60)
+        c.put("b", 2, nbytes=30)
+        c.put("c", 3, nbytes=50)  # evicts the oldest, a
+        assert list(c) == ["b", "c"] and c.nbytes == 80
+        c.put("d", 4, nbytes=100)  # evicts every older entry
+        assert list(c) == ["d"] and c.nbytes == 100
+        assert c.put("e", 5, nbytes=101) == 5  # served, not cached
+        assert list(c) == ["d"] and c.nbytes == 100
+
+    def test_never_evicts_pinned_keys(self):
+        from tantivy_search_spark.search.engine import _LRU
+        c = _LRU(max_entries=2)
+        for k in "abc":
+            c.put(k, k, keep={"a", "b", "c"})
+        assert list(c) == ["a", "b", "c"]
+        assert c.get("a") == "a"  # a is now the most recent
+        c.put("d", "d", keep={"d"})
+        assert list(c) == ["a", "d"]

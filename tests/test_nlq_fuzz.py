@@ -84,6 +84,7 @@ class TestNlqFuzz:
         return qs
 
     def test_three_tiers_agree(self, corpus_a_index, queries):
+        from tantivy_search_spark.bitmap import row_ids_to_u8_bitmap
         from tantivy_search_spark.search.engine import SearchIndex
 
         ix = corpus_a_index
@@ -100,12 +101,26 @@ class TestNlqFuzz:
         for i, q in enumerate(queries):
             assert _key(by_q[i]) == seq[q], f"batch != sequential: {q!r}"
 
+        # alive-filtered pass: the same bitmap on both tiers
+        alive = row_ids_to_u8_bitmap([0, 2, 3])
+        seq_alive = {}
+        for q in queries:
+            df = ix.bm25_search(q, top_k=5, enable_nlq=True,
+                                alive_bitmap=alive)
+            seq_alive[q] = _key([(r["row_id"], r["score"])
+                                 for r in df.collect()])
+
         loc = SearchIndex.open_local(ix.index_path)
         try:
             for q in queries:
                 got = _key(loc.bm25_search_local(q, top_k=5,
                                                  enable_nlq=True))
                 assert got == seq[q], f"local != sequential: {q!r}"
+                got = _key(loc.bm25_search_local(q, top_k=5,
+                                                 enable_nlq=True,
+                                                 alive_bitmap=alive))
+                assert got == seq_alive[q], \
+                    f"local != sequential with alive bitmap: {q!r}"
         finally:
             loc.close()
 

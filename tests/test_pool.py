@@ -82,7 +82,8 @@ class TestOpenLocal:
         bm = row_ids_to_u8_bitmap([0, 2, 4])
         for kw in ({"use_wand": True},
                    {"alive_bitmap": bm},
-                   {"enable_nlq": True}):
+                   {"enable_nlq": True},
+                   {"use_wand": True, "alive_bitmap": bm}):
             got = _loc(local_ix, "ancient rise fall", True,
                        column_names=["col1"], **kw)
             want = _loc(corpus_a_index, "ancient rise fall", True,

@@ -225,3 +225,51 @@ def test_duplicate_atom_and_falls_back_to_exact(spark, corpus_a_index):
                            use_wand=True).collect()]
     assert seq == wand
     assert seq  # non-vacuous: 'ancient' matches docs
+
+
+def test_local_wand_alive_equals_distributed(spark, tmp_path):
+    """In-process ``use_wand`` + ``alive_bitmap`` answers what the
+    distributed block-max path answers — AND and OR, before and after a
+    delete.  The in-process block-max branch these queries once took
+    called make_wand_scorer with stale keywords and raised TypeError."""
+    from tantivy_search_spark.bitmap import row_ids_to_u8_bitmap
+    from tantivy_search_spark.config import IndexConfig
+    from tantivy_search_spark.index.builder import IndexBuilder
+    from tantivy_search_spark.search.engine import SearchIndex
+
+    vocab = "spark join order window scan merge hash the fast slow".split()
+    rng = np.random.default_rng(7)
+    n_docs = 600
+    rows = [{"doc_id": i, "text": " ".join(
+                rng.choice(vocab, size=int(rng.integers(3, 30))))}
+            for i in range(n_docs)]
+    cfg = IndexConfig.from_json(["text"], "{}")
+    cfg.parts_per_shard = 2
+    cfg.block_size = 16  # multi-block postings: the scorer prunes
+    path = str(tmp_path / "wand_alive")
+    IndexBuilder(spark, path, cfg, rows_per_part=100).build(
+        spark.createDataFrame(rows), id_col="doc_id")
+    ix = SearchIndex(spark, path)
+    bm = row_ids_to_u8_bitmap([i for i in range(n_docs) if i % 3])
+
+    def rank(pairs):
+        return sorted(((r, round(s, 6)) for r, s in pairs),
+                      key=lambda x: (-x[1], x[0]))
+
+    def check(deleted):
+        for s in ("spark join", "window the scan"):
+            for op in (False, True):
+                kw = dict(top_k=10, operator_or=op, use_wand=True,
+                          alive_bitmap=bm)
+                local = rank(ix.bm25_search_local(s, **kw))
+                dist = rank((r["row_id"], r["score"])
+                            for r in ix.bm25_search(s, **kw).collect())
+                assert local, (s, op)
+                assert all(r % 3 and r not in deleted for r, _ in local)
+                assert_topk_equal(dist, local)
+
+    check(set())
+    victims = [r for r, _ in ix.bm25_search_local(
+        "spark join", top_k=3, alive_bitmap=bm)]
+    ix.delete_row_ids(victims)
+    check(set(victims))
