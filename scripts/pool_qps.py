@@ -119,10 +119,8 @@ def build_index() -> None:
         print(f"built {N_FILES} docs in {time.time() - t0:.1f}s",
               file=sys.stderr)
         if os.environ.get("POOL_OPTIMIZE", "1") == "1":
-            # serve-optimized term-major layout (Tantivy's .idx files are
-            # term-dictionary-ordered by construction; this is the analog)
-            m = b.optimize_layout()
-            print(f"optimize_layout: {m}", file=sys.stderr)
+            # the build already writes term-sorted postings; the hot-term
+            # bitmap sidecar is the one serve-side extra
             m = b.build_bitmap_sidecar()
             print(f"bitmap_sidecar: {m}", file=sys.stderr)
     spark.stop()

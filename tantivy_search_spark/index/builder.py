@@ -16,8 +16,9 @@ Spark-first design — one tokenize pass, two shuffles total:
                  posting rows; shard = part_id // parts_per_shard bounds
                  group memory and doubles as the skew salt for hot terms
                  ("if"/"return"); rows are further split into ``sub`` rows
-                 at max_postings_per_sub.  Output partitioned by
-                 bucket = crc32(term) % n_buckets for file pruning.
+                 at max_postings_per_sub.  Output: one exchange on
+                 bucket = crc32(term) % n_buckets, then one term-sorted
+                 file per bucket (``write_postings``).
   stage stats    global term dictionary (col, term, df) — a map-side
                  combinable sum over merged rows.
 
@@ -70,6 +71,25 @@ _CRC_EXPR = "crc32(encode({col}, 'utf-8')) % {n}"
 def bucket_col(term_col: str, n_buckets: int):
     """JVM-side crc32 bucket — must agree with layout.term_bucket (zlib.crc32)."""
     return (F.crc32(F.encode(F.col(term_col), "utf-8")) % n_buckets).cast("int")
+
+
+def write_postings(df: DataFrame, path: str, mode: str = "overwrite",
+                   row_group_bytes: int | None = None) -> None:
+    """The one postings writer: every bucket's rows go to ONE task
+    (hash exchange on ``bucket``), sorted by (col, term, shard, sub), so
+    each write leaves one term-clustered file per bucket it touches, in
+    row groups of ~``row_group_bytes`` (default
+    ``layout.POSTINGS_ROW_GROUP_BYTES``).  A term's rows are then
+    adjacent and its row group is found from the footer statistics
+    alone — the embedded reader's row-group directory
+    (engine._fetch_rows_arrow) and the Spark scan's row-group pruning
+    both read only it."""
+    (df.repartition("bucket")
+     .sortWithinPartitions("bucket", "col", "term", "shard", "sub")
+     .write.mode(mode)
+     .option("parquet.block.size",
+             row_group_bytes or layout.POSTINGS_ROW_GROUP_BYTES)
+     .partitionBy("bucket").parquet(path))
 
 
 def _sort_key_expr(order_cols: list[str]):
@@ -969,6 +989,13 @@ class IndexBuilder:
                 f"resume: this build was checkpointed with docs_sha="
                 f"{docs_ck.get('docs_sha', 'sidecar')!r}; restart with "
                 f"overwrite=True to change it")
+        elif docs_ck.get("rows_per_part") not in (None, self.rows_per_part):
+            # the checkpointed docs/segments stages cut parts at the old
+            # size; resuming would mix two part grids in one index
+            raise ValueError(
+                f"resume: this build was checkpointed with rows_per_part="
+                f"{docs_ck['rows_per_part']!r}; restart with "
+                f"overwrite=True to change it")
         total_docs = docs_ck["total_docs"]
         metrics["stages"]["docs"] = docs_ck
 
@@ -1103,10 +1130,8 @@ class IndexBuilder:
         if merge_ck is None:
             t0 = time.time()
             segs = self.spark.read.parquet(os.path.join(seg_path, "chunk=*"))
-            merged = self._merge_fragments(segs, cfg_json)
-            merged.write.mode("overwrite").partitionBy("bucket").parquet(
-                os.path.join(self.index_path, POSTINGS_DIR)
-            )
+            write_postings(self._merge_fragments(segs, cfg_json),
+                           os.path.join(self.index_path, POSTINGS_DIR))
             secs = time.time() - t0
             merge_ck = {"secs": secs,
                         "docs_per_sec": total_docs / max(secs, 1e-9)}
@@ -1296,8 +1321,7 @@ class IndexBuilder:
         tomb_dir = os.path.join(self.index_path, TOMBSTONES_DIR)
         purge_bc = None
         tombs_df = None
-        if purge_deletes and os.path.isdir(tomb_dir) and any(
-                n.endswith(".parquet") for n in os.listdir(tomb_dir)):
+        if purge_deletes and layout.data_files(tomb_dir):
             tombs_df = spark.read.parquet(tomb_dir).select("doc_id").distinct()
             purge_arr = np.sort(
                 tombs_df.toPandas()["doc_id"].to_numpy(np.int64))
@@ -1345,7 +1369,7 @@ class IndexBuilder:
             .unionByName(compacted)
         new_dir = postings_dir + "_compacting"
         shutil.rmtree(new_dir, ignore_errors=True)
-        out.write.mode("overwrite").partitionBy("bucket").parquet(new_dir)
+        write_postings(out, new_dir)
         self._ensure_readable(new_dir, layout.POSTINGS_SCHEMA)
         # swap (same pattern as stats swap in append())
         old_dir = postings_dir + "_old"
@@ -1445,25 +1469,20 @@ class IndexBuilder:
         return {"purged_docs": int(n_purged), "total_docs": int(total_docs)}
 
     def optimize_layout(self, row_group_mb: int = 4) -> dict:
-        """Term-major rewrite of the postings table — serve-optimize.
+        """Rewrite every bucket as ONE term-sorted file with row groups
+        of ``row_group_mb`` MB.
 
-        The merge stage writes posting rows in task order, so a term's
-        fragment rows (tail terms pass through unmerged, one row per
-        part — `_merge_fragments`) smear across every file of their
-        bucket: parquet term min/max statistics then prune nothing, and
-        a single-term lookup reads ~the whole bucket's heavy columns
-        (measured 177 ms/term on a 5.6M-doc index whose real postings
-        were a few KB).  This job re-sorts each bucket by (col, term,
-        shard, sub) into one file with small row groups — a pure JVM
-        repartition+sort (no Python stage, rows and encodings are
-        byte-identical), after which term row-group pruning works for
-        BOTH tiers: the embedded pyarrow reader (row-group stats) and
-        the Spark scan (page-level column index).  The reference analog
-        is Tantivy's term-dictionary-ordered .idx segment layout, which
-        gets this locality by construction.
+        Build, compact and append already write term-clustered files
+        (``write_postings``), so a fresh build gains nothing here.
+        What remains is re-sorting an index written before that: there
+        a term's rows sit in task order across several files of its
+        bucket, and each lookup reads them all.  Also folds the extra
+        file per touched bucket that each ``append`` adds.  A pure JVM
+        exchange + sort (no Python stage; rows and encodings are
+        byte-identical).
 
-        Idempotent; call after build/append/compact.  Open readers must
-        ``reload()`` afterwards (same contract as compact)."""
+        Idempotent.  Open readers must ``reload()`` afterwards (same
+        contract as compact)."""
         spark = self.spark
         layout.recover_swaps(self.index_path, drop_stray=True)
         postings_dir = os.path.join(self.index_path, POSTINGS_DIR)
@@ -1471,17 +1490,8 @@ class IndexBuilder:
         t0 = time.time()
         new_dir = postings_dir + "_optimizing"
         shutil.rmtree(new_dir, ignore_errors=True)
-        # NO exchange: the hive layout already groups each bucket's
-        # files, and Spark's file splits never span files, so every
-        # read task holds whole buckets — an in-task sort plus the
-        # partitionBy writer gives per-bucket term-sorted files with
-        # zero shuffle (a full repartition spills ~the index size to
-        # shuffle disk for nothing)
-        (postings
-         .sortWithinPartitions("bucket", "col", "term", "shard", "sub")
-         .write.mode("overwrite")
-         .option("parquet.block.size", row_group_mb * 1024 * 1024)
-         .partitionBy("bucket").parquet(new_dir))
+        write_postings(postings, new_dir,
+                       row_group_bytes=row_group_mb * 1024 * 1024)
         old_dir = postings_dir + "_old"
         shutil.rmtree(old_dir, ignore_errors=True)
         os.rename(postings_dir, old_dir)
@@ -1837,9 +1847,10 @@ class IndexBuilder:
             .groupBy("part_id").applyInPandas(
                 _segment_builder(cfg_json), layout.SEGMENTS_SCHEMA) \
             .write.mode("overwrite").parquet(seg_chunk)
-        self._merge_fragments(self.spark.read.parquet(seg_chunk), cfg_json) \
-            .write.mode("append").partitionBy("bucket").parquet(
-                os.path.join(self.index_path, POSTINGS_DIR))
+        write_postings(
+            self._merge_fragments(self.spark.read.parquet(seg_chunk),
+                                  cfg_json),
+            os.path.join(self.index_path, POSTINGS_DIR), mode="append")
 
         # stats + meta recomputed from the full postings table
         postings = self.spark.read.parquet(

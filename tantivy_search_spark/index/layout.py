@@ -8,10 +8,18 @@ partition column usable as an Iceberg identity partition):
       _index_meta.json                 # config + global stats + lineage
       docs/                            # doc_id, metadata, content sha256
       segments/part_group=<g>/         # stage-1 per-partition posting fragments
-      postings/bucket=<b>/             # merged postings, term-hash bucketed
+      postings/bucket=<b>/             # term-sorted file(s) of the bucket
       stats/                           # (col, term, df) global term dictionary
       tombstones/                      # deleted doc_ids
       _checkpoints/                    # per-stage/per-part-group manifests
+
+Postings are term-clustered: bucket = crc32(term) % n_buckets, and every
+postings write (build merge, compact, append, optimize_layout) leaves one
+file per bucket it touches, sorted by (col, term, shard, sub) in row
+groups of ~POSTINGS_ROW_GROUP_BYTES.  A fresh build therefore has one
+file per non-empty bucket; each append adds one more to the buckets it
+touches.  Readers find a term's row group from the footer statistics
+(col/term min/max per row group) — no separate term-location table.
 
 Posting rows (both fragment and merged) hold delta-encoded docID blocks
 of <= block_size postings with skip pointers (block_first/block_last) and
@@ -46,10 +54,31 @@ DOCS_VIEW_FILE = "docs_view.json"  # docs_mode='view': source snapshot spec
 BITMAPS_DIR = "bitmaps"
 CHECKPOINTS_DIR = "_checkpoints"
 
+#: parquet row-group target (bytes, parquet-mr's buffered-size measure)
+#: of the postings writer.  A reader cache miss reads one row group, so
+#: small groups read less per miss, but each group adds footer and page
+#: overhead.  On the 4,000-doc benchmark corpus (64 buckets, 82,781
+#: posting rows; 4.56 MB as unsorted files) the targets 16/32/64/128 KB
+#: gave 150/293/536/662-row groups, 4.88/4.02/3.61/3.44 MB of postings
+#: and a per-miss fetch of about 1.0/1.0/1.0/1.5 ms (CPU, 4-core VM).
+POSTINGS_ROW_GROUP_BYTES = 64 * 1024
+
 
 def term_bucket(term: str, n_buckets: int) -> int:
     """Stable term -> file bucket (crc32 — identical on driver & executors)."""
     return zlib.crc32(term.encode("utf-8")) % n_buckets
+
+
+def data_files(path: str) -> list[str]:
+    """Parquet data files directly under ``path`` (sorted; none if it
+    does not exist).  Names starting with '.' or '_' are skipped, as
+    pyarrow datasets and Spark skip them: temp files, _SUCCESS."""
+    try:
+        names = os.listdir(path)
+    except FileNotFoundError:
+        return []
+    return [os.path.join(path, n) for n in sorted(names)
+            if n.endswith(".parquet") and n[0] not in "._"]
 
 
 def recover_swaps(index_path: str, drop_stray: bool = False) -> None:

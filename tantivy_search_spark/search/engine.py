@@ -60,6 +60,7 @@ from tantivy_search_spark.index.layout import (
     STATS_DIR,
     TOMBSTONES_DIR,
     IndexMeta,
+    data_files,
     term_bucket,
 )
 from tantivy_search_spark.search import querytree as qt
@@ -228,7 +229,12 @@ class _ReaderCaches:
         self.bitmaps = _LRU(ix.BITMAP_CACHE_CAPACITY)
         self.plans = _LRU(256)  # query shape -> prepared DataFrame
         self.sidecar: dict | None = None  # opened bitmap sidecar
-        self.dataset = None  # pyarrow postings dataset
+        # postings row-group directory: bucket -> [(path, footer,
+        # row-group bounds)], filled at each bucket's first fetch; the
+        # open parquet handles ride their own LRU (the fd count stays
+        # bounded on layouts with many files per bucket)
+        self.directory: dict = {}
+        self.files = _LRU(ix.FETCH_OPEN_FILES)  # path -> pq.ParquetFile
         self.postings_bytes: int | None = None
         self.empty_scores: DataFrame | None = None
 
@@ -778,7 +784,7 @@ class SearchIndex:
     def close(self) -> None:
         """Reference ffi_free_index_reader analog (Q14): release every
         driver-side resource this reader holds — broadcasts, decoded-
-        postings LRUs, stats/bitmap caches, the pyarrow dataset handle.
+        postings LRUs, stats/bitmap caches, the open postings files.
         The object stays usable; the next query simply re-warms."""
         self._swap_broadcast_pool()
         self._stats_cache = None
@@ -835,7 +841,7 @@ class SearchIndex:
     def _tombstone_df(self) -> DataFrame | None:
         """Raw tombstones table (may contain duplicates) or None."""
         path = os.path.join(self.index_path, TOMBSTONES_DIR)
-        if not os.path.exists(path):
+        if not data_files(path):
             return None
         return self._require_spark().read.parquet(path)
 
@@ -858,21 +864,17 @@ class SearchIndex:
         large delete sets stay as a DataFrame anti-join."""
         if self._tombstones is None:
             path = os.path.join(self.index_path, TOMBSTONES_DIR)
-            if self.spark is None:
-                if os.path.exists(path):
-                    import pyarrow.dataset as ds
-                    ids = ds.dataset(path).to_table(
-                        columns=["doc_id"])["doc_id"].to_numpy()
-                    self._tombstones = np.unique(ids.astype(np.int64))
-                else:
-                    self._tombstones = np.empty(0, dtype=np.int64)
-            elif os.path.exists(path):
-                rows = self._tombstone_df().select("doc_id").collect()
-                self._tombstones = np.unique(
-                    np.array([r["doc_id"] for r in rows], dtype=np.int64)
-                )
+            ids = np.empty(0, dtype=np.int64)
+            if not data_files(path):
+                pass
+            elif self.spark is None:
+                import pyarrow.dataset as ds
+                ids = ds.dataset(path).to_table(
+                    columns=["doc_id"])["doc_id"].to_numpy()
             else:
-                self._tombstones = np.empty(0, dtype=np.int64)
+                rows = self._tombstone_df().select("doc_id").collect()
+                ids = np.array([r["doc_id"] for r in rows], dtype=np.int64)
+            self._tombstones = np.unique(ids.astype(np.int64))
         return self._tombstones
 
     def _tombstone_small_array(self) -> np.ndarray | None:
@@ -1028,15 +1030,20 @@ class SearchIndex:
         pdf = pd.DataFrame({"doc_id": np.asarray(sorted(set(row_ids)), dtype=np.int64)})
         tomb_dir = os.path.join(self.index_path, TOMBSTONES_DIR)
         if self.spark is None:
-            # embedded tier: append a tombstone part file directly
+            # embedded tier: append a tombstone part file directly.  It
+            # is written under a '.'-prefixed name (skipped by pyarrow
+            # datasets and Spark) and renamed into place, so a concurrent
+            # reader never opens a half-written file
             import uuid
 
             import pyarrow as pa
             import pyarrow.parquet as pq
             os.makedirs(tomb_dir, exist_ok=True)
-            pq.write_table(
-                pa.Table.from_pandas(pdf, preserve_index=False),
-                os.path.join(tomb_dir, f"part-local-{uuid.uuid4().hex}.parquet"))
+            name = f"part-local-{uuid.uuid4().hex}.parquet"
+            tmp = os.path.join(tomb_dir, "." + name)
+            pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False),
+                           tmp)
+            os.replace(tmp, os.path.join(tomb_dir, name))
         else:
             self._require_spark().createDataFrame(pdf).write.mode("append").parquet(
                 tomb_dir)
@@ -2213,37 +2220,93 @@ class SearchIndex:
         self._local_cache_max = max_terms
         self._caches = _ReaderCaches(self)
 
-    def _postings_dataset(self):
-        """pyarrow dataset over the postings files — the local path reads
-        the open-parquet index directly (bucket partition dirs + term
-        row-group statistics pushdown), no Spark job even cold.  File
-        listing happens once per reader; reload() drops it."""
+    #: parquet handles an in-process reader keeps open (a fresh build
+    #: has one postings file per bucket, so 64 by default)
+    FETCH_OPEN_FILES = 256
+
+    def _postings_file(self, path: str, metadata=None):
+        """Open parquet handle of one postings file, kept per reader
+        generation (``metadata`` skips the footer read on a reopen)."""
+        import pyarrow.parquet as pq
+        files = self._caches.files
+        pf = files.get(path)
+        if pf is None:
+            pf = files.put(path, pq.ParquetFile(path, metadata=metadata))
+        return pf
+
+    def _bucket_directory(self, bucket: int) -> list:
+        """[(path, footer, bounds)] for the postings files that can
+        hold a term of ``bucket``: bounds[i] = (col min, col max, term
+        min, term max) of row group i from the footer statistics, or
+        None where the footer has none (that row group is always read).
+        Built at the bucket's first fetch in this generation; no index
+        file beyond the postings themselves is read."""
         c = self._caches
-        if c.dataset is None:
-            import pyarrow.dataset as ds
-            c.dataset = ds.dataset(
-                os.path.join(self.index_path, POSTINGS_DIR),
-                partitioning="hive")
-        return c.dataset
+        files = c.directory.get(bucket)
+        if files is not None:
+            return files
+        files = []
+        for path in data_files(os.path.join(
+                self.index_path, POSTINGS_DIR, f"bucket={bucket}")):
+            md = self._postings_file(path).metadata
+            ci, ti = (md.schema.names.index(n) for n in ("col", "term"))
+            bounds = []
+            for g in range(md.num_row_groups):
+                rg = md.row_group(g)
+                sc, st = rg.column(ci).statistics, rg.column(ti).statistics
+                bounds.append(
+                    (sc.min, sc.max, st.min, st.max)
+                    if sc is not None and st is not None
+                    and sc.has_min_max and st.has_min_max else None)
+            files.append((path, md, bounds))
+        c.directory[bucket] = files
+        return files
 
     def _fetch_rows_arrow(self, atoms: list[tuple[str, str]],
                           columns: list[str]) -> pd.DataFrame:
-        """(col, term) posting rows via direct parquet read."""
-        import pyarrow.dataset as ds
-        terms = sorted({t for _, t in atoms})
-        buckets = sorted({term_bucket(t, self.config.n_buckets)
-                          for t in terms})
-        cols = sorted({c for c, _ in atoms})
-        expr = (ds.field("bucket").isin(buckets)
-                & ds.field("term").isin(terms)
-                & ds.field("col").isin(cols))
-        return self._postings_dataset().to_table(
-            filter=expr, columns=columns).to_pandas()
+        """The posting rows of exactly the (col, term) ``atoms``, read
+        through the row-group directory: each atom's bucket files are
+        opened once per generation and only the row groups whose
+        footer bounds admit the atom are read.  A term-sorted bucket
+        file (``builder.write_postings``) answers from one row group;
+        an unsorted one (indexes written before that writer sorted)
+        from every row group whose bounds span the term — same rows
+        either way."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        atoms = list(dict.fromkeys(atoms))
+        by_bucket: dict = {}
+        by_col: dict = {}
+        for col, t in atoms:
+            by_bucket.setdefault(
+                term_bucket(t, self.config.n_buckets), []).append((col, t))
+            by_col.setdefault(col, []).append(t)
+        read = list(dict.fromkeys(["col", "term", *columns]))
+        parts = []
+        for bucket, keys in by_bucket.items():
+            for path, md, bounds in self._bucket_directory(bucket):
+                groups = [g for g, bd in enumerate(bounds)
+                          if bd is None or any(
+                              bd[0] <= col <= bd[1] and bd[2] <= t <= bd[3]
+                              for col, t in keys)]
+                if groups:
+                    parts.append(self._postings_file(path, md)
+                                 .read_row_groups(groups, columns=read,
+                                                  use_threads=False))
+        if not parts:
+            return pd.DataFrame({c: [] for c in columns})
+        tbl = parts[0] if len(parts) == 1 else pa.concat_tables(
+            parts, promote_options="default")
+        mask = None
+        for col, terms in by_col.items():
+            m = pc.and_(pc.equal(tbl["col"], col),
+                        pc.is_in(tbl["term"], value_set=pa.array(terms)))
+            mask = m if mask is None else pc.or_(mask, m)
+        return tbl.filter(mask).select(columns).to_pandas(split_blocks=True)
 
     def _local_postings(self, atoms: list[tuple[str, str]]) -> dict:
         """(col, term) -> doc-sorted (doc_ids, tfs, norm_ids): one
-        pruned scan for all cache misses, decoded into the postings
-        LRU."""
+        fetch for all cache misses, decoded into the postings LRU."""
         cache = self._caches.postings
         out, missing = {}, []
         for a in atoms:
@@ -2280,15 +2343,11 @@ class SearchIndex:
                    bitmaps: bool = False, batch_size: int = 512) -> int:
         """Bulk-warm the embedded reader for a known query workload.
 
-        First touch of a term pays a pruned parquet scan whose cost is
-        dominated by the bucket's fragment files, not the term's own
-        postings (a tail term's fragments are per-shard rows smeared
-        across every file of its bucket).  ``_local_postings`` /
-        ``_local_doc_ids`` already fetch all cache misses in ONE scan,
-        so warming a workload's distinct terms in batches costs a few
-        bucket scans instead of one scan per query: 512 distinct
-        2-term queries warm in seconds instead of ~20 minutes on a
-        5.6M-doc index.
+        First touch of a term reads its row group(s) through the
+        postings directory; ``_local_postings`` / ``_local_doc_ids``
+        fetch all cache misses of one call together, so a batch of
+        terms sharing a row group reads it once, and the queries that
+        follow start with their postings decoded.
 
         ``queries`` are raw query strings (or bare terms); they pass
         through the column's analyzer, and their terms' decoded

@@ -47,6 +47,39 @@ class TestDeletes:
         assert ix.regex_term_bitmap("col1", "An%ent") == bytes([1])
 
 
+    def test_stray_dot_tombstone_ignored(self, fresh_index):
+        """An embedded delete writes its tombstone file under a
+        '.'-prefixed temp name and renames it into place: no temp file
+        is left, and a stray partial '.'-file (a crashed or in-flight
+        write) is skipped by both tiers."""
+        from tantivy_search_spark.search.engine import SearchIndex
+
+        path = fresh_index.index_path
+        tomb_dir = os.path.join(path, "tombstones")
+        os.makedirs(tomb_dir)
+        stray = os.path.join(tomb_dir, ".part-local-stray.parquet")
+        with open(stray, "wb") as f:
+            f.write(b"PAR1")  # a 4-byte partial file
+        # only the stray file: nothing is deleted, on either tier
+        loc = SearchIndex.open_local(path)
+        assert loc.get_indexed_doc_counts() == 5
+        assert loc.query_term_bitmap("col1", "Ancient") == bytes([17])
+        assert SearchIndex(fresh_index.spark, path).query_term_bitmap(
+            "col1", "Ancient") == bytes([17])
+
+        assert loc.delete_row_ids([4])
+        names = sorted(os.listdir(tomb_dir))
+        assert [n for n in names if n.startswith(".")] == [
+            ".part-local-stray.parquet"]
+        assert len([n for n in names if n.startswith("part-local-")]) == 1
+        assert loc.query_term_bitmap("col1", "Ancient") == bytes([1])
+        assert loc.get_indexed_doc_counts() == 4
+        spark_ix = SearchIndex(fresh_index.spark, path)
+        assert spark_ix.query_term_bitmap("col1", "Ancient") == bytes([1])
+        assert spark_ix.get_indexed_doc_counts() == 4
+        loc.close()
+
+
 class TestLargeDeleteSets:
     def test_anti_join_path_no_driver_materialization(self, fresh_index):
         """Past TOMBSTONE_BROADCAST_MAX the distributed paths must switch
@@ -162,6 +195,34 @@ class TestResume:
         assert ck["docs_per_sec"] > 0
         assert len(ck["lineage"]) >= 1
         assert {"part_id", "terms", "postings", "tokens"} <= set(ck["lineage"][0])
+
+    def test_resume_rows_per_part_mismatch_raises(self, spark, tmp_path):
+        """The docs checkpoint records rows_per_part; resuming with a
+        different one would cut the remaining stages on another part
+        grid, so it raises like a docs_mode/docs_sha change does."""
+        from tantivy_search_spark.config import IndexConfig
+        from tantivy_search_spark.index.builder import IndexBuilder
+
+        path = str(tmp_path / "rpp_idx")
+        cfg = IndexConfig.from_json(["col1", "col2", "col3"], "{}")
+        df = spark.createDataFrame(corpus_a_rows())
+        b = IndexBuilder(spark, path, cfg, rows_per_part=2)
+        orig = b._ckpt_write
+
+        def bomb(name, payload):
+            orig(name, payload)
+            if name == "docs":
+                raise RuntimeError("injected crash after docs")
+
+        b._ckpt_write = bomb
+        with pytest.raises(RuntimeError):
+            b.build(df, id_col="doc_id")
+        with pytest.raises(ValueError, match="rows_per_part=2"):
+            IndexBuilder(spark, path, cfg, rows_per_part=3).build(
+                df, id_col="doc_id")
+        meta = IndexBuilder(spark, path, cfg, rows_per_part=2).build(
+            df, id_col="doc_id")
+        assert meta.total_docs == 5
 
     def test_full_rebuild_after_done_is_noop(self, spark, tmp_path):
         """Re-running build over a completed index skips all stages."""
